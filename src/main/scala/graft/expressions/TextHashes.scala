@@ -1,11 +1,12 @@
 package graft.expressions
 
+import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
@@ -312,6 +313,69 @@ case class SimHash64(child: Expression, maxTokensPerDoc: Long)
 object SimHash64 {
   def simhash(text: Column, maxTokensPerDoc: Long = Int.MaxValue): Column =
     ColumnBridge.column(SimHash64(ColumnBridge.expression(text), maxTokensPerDoc))
+}
+
+/** `HashEmbed(text, dim)` — the deterministic hashing featurizer: the
+  * token-count vector of dimension `dim` where each token lands in
+  * bucket `(md5(token)(0) >>> 4) % dim` (the first hex digit of its
+  * md5, mod dim). Value-identical to the explode → md5 bucket → count
+  * formulation and the DuckDB `embedText` mirror, but one eval per
+  * chunk: no row per token, no shuffle, no join back to the chunks.
+  * Null in → null out; text with no tokens (empty or spaces only) →
+  * the zero vector. Counts are exact small integers, so the vector is
+  * bit-identical however the tokens are visited.
+  */
+case class HashEmbed(child: Expression, dim: Int)
+    extends UnaryExpression
+    with CodegenFallback {
+
+  require(dim >= 1, "hash_embed: dim must be >= 1")
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case StringType => TypeCheckResult.TypeCheckSuccess
+    case other =>
+      TypeCheckResult.TypeCheckFailure(
+        s"hash_embed requires a string input, got ${other.catalogString}")
+  }
+
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+
+  override def nullSafeEval(input: Any): Any =
+    UnsafeArrayData.fromPrimitiveArray(HashEmbed.vector(input.asInstanceOf[UTF8String], dim))
+
+  override def prettyName: String = "hash_embed"
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object HashEmbed {
+
+  // one digest per thread, reused across tokens and rows
+  private val md5 = ThreadLocal.withInitial[MessageDigest](() => MessageDigest.getInstance("MD5"))
+
+  /** Static kernel shared by the expression and driver-side callers. */
+  def vector(text: UTF8String, dim: Int): Array[Double] = {
+    val toks = TextHashKernels.tokens(text)
+    val md = md5.get()
+    val d = new Array[Byte](16)
+    val v = new Array[Double](dim)
+    var i = 0
+    while (i < toks.length) {
+      md.update(toks(i).getBytes(StandardCharsets.UTF_8))
+      md.digest(d, 0, 16) // also resets the digest
+      v(((d(0) & 0xff) >>> 4) % dim) += 1.0
+      i += 1
+    }
+    v
+  }
+
+  /** The kernel on a driver-side string; null in → null out. */
+  def vector(text: String, dim: Int): Array[Double] =
+    if (text == null) null else vector(UTF8String.fromString(text), dim)
+
+  def embed(text: Column, dim: Int): Column =
+    ColumnBridge.column(HashEmbed(ColumnBridge.expression(text), dim))
 }
 
 /** `sorted_hashes64(strings)` — each string's 64-bit hash (md5's first

@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.expressions.CosineSimilarity
+import graft.expressions.{CosineSimilarity, HashEmbed}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -35,24 +35,14 @@ object VectorFns {
       (acc, x) => acc + x)
 
   /** Deterministic hashing featurizer: token-count vector of dimension
-    * `dim` (≤16), bucket = first hex digit of md5(token) mod dim.
-    * Pure column expression → exactly mirrorable in DuckDB SQL.
+    * `dim` (≤16), bucket = first hex digit of md5(token) mod dim. The
+    * `HashEmbed` kernel (one eval per row), shared with RAG chunk
+    * scoring and the query-side vector; value-identical to the
+    * explode → md5 bucket → count formulation that the DuckDB
+    * `embedText` mirror computes.
     */
   def embedText(text: Column, dim: Int = 16): Column = {
     require(dim > 0 && dim <= 16, "featurizer dim must be in 1..16")
-    // one md5 per TOKEN, then a count-vector fold — the per-dimension
-    // filter formulation re-evaluates the token hashes once per
-    // bucket (dim × tokens md5 calls; measured 2.4× on the hybrid
-    // retrieval query). Counts are order-independent, so the result
-    // is bit-identical to the filter form and the same DuckDB mirror
-    val buckets = transform(
-      TextFns.tokens(text),
-      t =>
-        ((instr(lit("0123456789abcdef"), substring(md5(t), 1, 1)) - 1) % dim)
-          .cast("int"))
-    aggregate(
-      buckets,
-      array_repeat(lit(0.0), dim),
-      (acc, b) => transform(acc, (v, j) => when(b === j, v + 1.0).otherwise(v)))
+    HashEmbed.embed(text, dim)
   }
 }

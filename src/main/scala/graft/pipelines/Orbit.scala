@@ -132,8 +132,11 @@ object Orbit {
   /** E1/F1 — retrieval with the reference's fallback-if-empty
     * company filter (`rag_pipeline.py:51-75`): filter chunks whose
     * source contains the company id; if that yields nothing, fall
-    * back to the unfiltered corpus. Driver-side conditional (two
-    * actions), as the semantics demand (SURVEY §7.4 hard part 3).
+    * back to the unfiltered corpus. A driver-side conditional, as the
+    * semantics demand (SURVEY §7.4 hard part 3), but one execution per
+    * hit: the filtered top-k runs once and comes back as a local
+    * relation of the same schema (collecting it runs no job); only an
+    * empty result returns the unfiltered plan for the caller to run.
     */
   def ragSearchCompany(
       docs: DataFrame,
@@ -141,11 +144,13 @@ object Orbit {
       queryText: String,
       topK: Int,
       chunkSize: Int = 1000): DataFrame = {
-    val filtered = Rag.topKChunks(
-      docs, s"$companyId $queryText", topK, chunkSize,
-      sourceContains = Some(companyId))
-    if (filtered.isEmpty)
-      Rag.topKChunks(docs, s"$companyId $queryText", topK, chunkSize)
-    else filtered
+    val query = s"$companyId $queryText"
+    val filtered = Rag.topKChunks(docs, query, topK, chunkSize, sourceContains = Some(companyId))
+    // bounded collect: a top-k result of at most `topK` rows (the
+    // ≤k-row class PlanHygieneSpec permits), never the corpus
+    val hits = filtered.collect()
+    if (hits.nonEmpty)
+      docs.sparkSession.createDataFrame(java.util.Arrays.asList(hits: _*), filtered.schema)
+    else Rag.topKChunks(docs, query, topK, chunkSize)
   }
 }

@@ -1,5 +1,6 @@
 package graft.pipelines
 
+import graft.expressions.HashEmbed
 import graft.functions.{TextFns, VectorFns}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
@@ -13,16 +14,15 @@ import org.apache.spark.sql.{Column, DataFrame}
   *   top-k — strictly better than the reference's over-fetch) →
   *   orderBy(score desc).limit(k) (W1) → projection (F11).
   *
-  * The embedder is the deterministic hashing featurizer computed as
-  * explode → codegen'd count aggregates (array-lambda featurizing
-  * profiled ~5× slower — HOF lambdas are interpreted); the query-side
-  * vector is computed on the driver. A production deployment swaps in
-  * a batched external embedding client behind the same column
+  * The embedder is the deterministic hashing featurizer, the
+  * `HashEmbed` kernel: one eval per chunk, so a search is one narrow
+  * stage (scan → filter → posexplode → score → TakeOrderedAndProject)
+  * with no row per token and no shuffle. The query-side vector comes
+  * from the same kernel on the driver. A production deployment swaps
+  * in a batched external embedding client behind the same column
   * contract (SURVEY §7.4 non-determinism firewall).
   */
 object Rag {
-
-  private val hexDigits = "0123456789abcdef"
 
   /** V4 — query augmentation: prepend the company id to the query text
     * before embedding so the company's own tokens pull its chunks up
@@ -41,33 +41,12 @@ object Rag {
       col("source"),
       posexplode(TextFns.chunks(col(textCol), chunkSize)).as(Seq("chunk_index", "chunk")))
 
-  /** Driver-side featurizer for the query string — must match the
-    * distributed bucket function exactly (first hex digit of
-    * md5(token) mod dim).
+  /** Driver-side featurizer for the query string: the same
+    * `HashEmbed` kernel the chunks are scored with, so a query
+    * identical to a chunk's text scores cosine 1 against it. Null in →
+    * null out.
     */
-  def embedQueryVector(text: String, dim: Int): Array[Double] = {
-    // EXACTLY TextFns.tokens semantics (space-only trim, regex split
-    // keeping empties): the driver-side query vector must tokenize the
-    // way the distributed bucket function does, or a query identical
-    // to a chunk's text would not score cosine 1 against it
-    var lo = 0
-    var hi = text.length
-    while (lo < hi && text.charAt(lo) == ' ') lo += 1
-    while (hi > lo && text.charAt(hi - 1) == ' ') hi -= 1
-    val t = text.substring(lo, hi)
-    val toks = if (t.isEmpty) Array.empty[String] else t.split("\\s+", -1)
-    val v = new Array[Double](dim)
-    toks.foreach { tok =>
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val hex = md.digest(tok.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      v(hexDigits.indexOf(hex.charAt(0)) % dim) += 1.0
-    }
-    v
-  }
-
-  /** Token-bucket expression mirroring embedQueryVector. */
-  private def bucketExpr(tok: Column, dim: Int): Column =
-    (instr(lit(hexDigits), substring(md5(tok), 1, 1)) - 1) % dim
+  def embedQueryVector(text: String, dim: Int): Array[Double] = HashEmbed.vector(text, dim)
 
   /** Full retrieval: top-k chunks for a query string. */
   def topKChunks(
@@ -83,28 +62,11 @@ object Rag {
       case Some(substr) => chunks.filter(lower(col("source")).contains(substr.toLowerCase))
       case None         => chunks
     }
-    // explode tokens -> one md5 per token -> dim count aggregates
-    val toks = filtered.select(
-      col("doc_id"),
-      col("chunk_index"),
-      explode(TextFns.tokens(col("chunk"))).as("tok"))
-    val counts = (0 until dim).map(j =>
-      sum(when(bucketExpr(col("tok"), dim) === j, 1).otherwise(0)).as(s"c$j"))
-    val vecs = toks
-      .groupBy(col("doc_id"), col("chunk_index"))
-      .agg(counts.head, counts.tail: _*)
-      .select(
-        col("doc_id"),
-        col("chunk_index"),
-        array((0 until dim).map(j => col(s"c$j").cast("double")): _*).as("vec"))
     val qvec = array(embedQueryVector(queryText, dim).toIndexedSeq.map(lit): _*)
-    // chunks with zero tokens vanish at the explode; rejoin and score
-    // them 0.0 (cosine-with-zero-norm semantics)
+    // chunkDocs emits no null chunk, and a chunk without tokens embeds
+    // to the zero vector, which scores 0.0
     filtered
-      .join(vecs, Seq("doc_id", "chunk_index"), "left")
-      .withColumn(
-        "score",
-        coalesce(VectorFns.cosine(col("vec"), qvec), lit(0.0)))
+      .withColumn("score", VectorFns.cosine(HashEmbed.embed(col("chunk"), dim), qvec))
       .orderBy(col("score").desc, col("doc_id"), col("chunk_index"))
       .limit(k)
       .select(

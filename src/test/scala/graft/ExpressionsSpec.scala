@@ -1,6 +1,7 @@
 package graft
 
-import graft.expressions.{MinHashSignature, SimHash64, SortedHashes64, SortedIntersectSize, WinnowFingerprints, WordShingles}
+import graft.expressions.{HashEmbed, MinHashSignature, SimHash64, SortedHashes64, SortedIntersectSize, WinnowFingerprints, WordShingles}
+import graft.pipelines.Rag
 import org.apache.spark.sql.functions._
 
 /** Unit tests for the per-document kernel expressions, pinned against
@@ -172,5 +173,37 @@ class ExpressionsSpec extends SparkSpec {
       .sql("SELECT id, nfc_normalize(t) AS n FROM nfc_in WHERE id = 1")
       .collect().head.getString(1)
     assert(viaSql == precomposed)
+  }
+
+  test("HashEmbed equals the explode + md5 bucket + count formulation and the query-side vector") {
+    val texts = Seq(
+      null,
+      "",
+      "   ",
+      "\tleading tab",           // empty first token
+      "trailing tab\t",          // empty last token
+      "runs   of    spaces  ",
+      "caf\u00e9 na\u00efve \u6771\u4eac \u00fcber caf\u00e9", // non-ASCII tokens
+      "spark spark join window spark")
+    val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "t")
+    for (dim <- Seq(1, 7, 16)) {
+      // the relational oracle: a row per token, its md5 bucket, counted
+      val bucket = (instr(lit("0123456789abcdef"), substring(md5($"tok"), 1, 1)) - 1) % dim
+      val counts = df
+        .select($"id", explode(graft.functions.TextFns.tokens($"t")).as("tok"))
+        .groupBy($"id", bucket.as("b")).count()
+        .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2).toDouble).toMap
+      val oracle = texts.zipWithIndex.map { case (t, i) =>
+        i.toLong -> Option(t).map(_ => Seq.tabulate(dim)(j => counts.getOrElse((i.toLong, j), 0.0)))
+      }.toMap
+      val got = df.select($"id", HashEmbed.embed($"t", dim).as("v"))
+        .collect().map(r => r.getLong(0) -> Option(r.getSeq[Double](1)).map(_.toSeq)).toMap
+      assert(got == oracle, s"dim $dim")
+      // blank text is the zero vector, not a unit vector at md5('')'s bucket
+      assert(got(1L).contains(Seq.fill(dim)(0.0)) && got(2L).contains(Seq.fill(dim)(0.0)))
+      texts.zipWithIndex.foreach { case (t, i) =>
+        assert(Option(Rag.embedQueryVector(t, dim)).map(_.toSeq) == oracle(i.toLong), s"dim $dim, text $i")
+      }
+    }
   }
 }

@@ -1,8 +1,11 @@
 package graft
 
 import graft.model.Models._
-import graft.pipelines.Orbit
+import graft.pipelines.{Orbit, Rag}
 import java.sql.Date
+import org.apache.spark.graftbridge.ListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 
 class OrbitSpec extends SparkSpec {
@@ -87,16 +90,67 @@ class OrbitSpec extends SparkSpec {
     assert(Orbit.payloadLookup(out, "acme").count() == 1)
   }
 
+  /** Runs `body`, counting the SQL executions it starts and the
+    * distinct executions that launched Spark jobs.
+    */
+  private def executions[T](body: => T): (T, Int, Int) = {
+    val sc = spark.sparkContext
+    ListenerBridge.drain(sc)
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val withJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => started.incrementAndGet()
+        case _                                 =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .foreach(withJobs.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      ListenerBridge.drain(sc)
+      (out, started.get, withJobs.size)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("E1 ragSearchCompany: company filter with fallback-if-empty") {
     val docs = Seq(
       (1L, "acme quarterly spark results", "acme/blog"),
-      (2L, "unrelated corpus text", "other/site")
+      (2L, "unrelated corpus text", "other/site"),
+      (3L, "spark results for everyone else", "other/news")
     ).toDF("doc_id", "text", "source")
+    // acme has one chunk, fewer than k: only its own, none filled in
     val hit = Orbit.ragSearchCompany(docs, "acme", "spark results", 5, chunkSize = 100)
-    assert(hit.collect().forall(_.getString(2) == "acme/blog"))
-    // no source matches "zcorp" -> falls back to unfiltered corpus
+    val own = Rag.topKChunks(docs, "acme spark results", 5, 100, sourceContains = Some("acme"))
+    assert(hit.schema == own.schema)
+    assert(hit.collect().toSeq == own.collect().toSeq)
+    assert(hit.collect().map(_.getString(2)).toSeq == Seq("acme/blog"))
+    // no source matches "zcorp" -> the unfiltered top-k
     val fallback = Orbit.ragSearchCompany(docs, "zcorp", "spark results", 5, chunkSize = 100)
-    assert(fallback.count() > 0)
+    assert(fallback.collect().toSeq ==
+      Rag.topKChunks(docs, "zcorp spark results", 5, 100).collect().toSeq)
+    assert(fallback.count() == 3)
+  }
+
+  test("E1 ragSearchCompany: a company hit runs one execution, its result none") {
+    // an RDD-backed frame: a local Seq would be folded by the optimizer
+    // and run no job at all
+    val docs = spark.sparkContext.parallelize(Seq(
+      (1L, "acme quarterly spark results", "acme/blog"),
+      (2L, "unrelated corpus text", "other/site")
+    ), 2).toDF("doc_id", "text", "source")
+    val (hit, started, searchRuns) =
+      executions(Orbit.ragSearchCompany(docs, "acme", "spark results", 5, chunkSize = 100))
+    assert(started == 1 && searchRuns == 1)
+    // the hit comes back local: collecting it launches no job
+    val (rows, _, jobRuns) = executions(hit.collect())
+    assert(rows.length == 1 && jobRuns == 0)
+    // a fallback pays the empty filtered top-k, then the caller's run
+    val (_, _, fallbackRuns) = executions(
+      Orbit.ragSearchCompany(docs, "zcorp", "spark results", 5, chunkSize = 100).collect())
+    assert(fallbackRuns == 2)
   }
 
   test("event_type domain matches the reference's 18-value enum") {

@@ -42,6 +42,68 @@ class PipelinesSpec extends SparkSpec {
     assert(all.collect().map(_.getLong(0)).contains(3L))
   }
 
+  /** The explode → md5 bucket → groupBy count → left-join scoring plan
+    * `Rag.topKChunks` ran before the `HashEmbed` kernel, with its
+    * driver-side query vector (one digest and hex string per token):
+    * the reference the kernel plan must reproduce row for row.
+    */
+  private def explodeJoinTopK(
+      docs: org.apache.spark.sql.DataFrame,
+      queryText: String,
+      k: Int,
+      chunkSize: Int,
+      sourceContains: Option[String]): org.apache.spark.sql.DataFrame = {
+    val dim = 16
+    val hex = "0123456789abcdef"
+    val chunks = Rag.chunkDocs(docs, "text", "doc_id", chunkSize)
+    val filtered = sourceContains.fold(chunks)(sub => chunks.filter(lower($"source").contains(sub)))
+    val toks = filtered.select($"doc_id", $"chunk_index",
+      explode(graft.functions.TextFns.tokens($"chunk")).as("tok"))
+    val bucket = (instr(lit(hex), substring(md5($"tok"), 1, 1)) - 1) % dim
+    val counts = (0 until dim).map(j => sum(when(bucket === j, 1).otherwise(0)).as(s"c$j"))
+    val vecs = toks.groupBy($"doc_id", $"chunk_index").agg(counts.head, counts.tail: _*)
+      .select($"doc_id", $"chunk_index",
+        array((0 until dim).map(j => col(s"c$j").cast("double")): _*).as("vec"))
+    val t = queryText.dropWhile(_ == ' ').reverse.dropWhile(_ == ' ').reverse // 0x20-only trim
+    val q = new Array[Double](dim)
+    if (t.nonEmpty) t.split("\\s+", -1).foreach { tok =>
+      val h = java.security.MessageDigest.getInstance("MD5").digest(tok.getBytes("UTF-8"))
+        .map("%02x".format(_)).mkString
+      q(hex.indexOf(h.charAt(0)) % dim) += 1.0
+    }
+    filtered.join(vecs, Seq("doc_id", "chunk_index"), "left")
+      .withColumn("score",
+        coalesce(graft.functions.VectorFns.cosine($"vec", array(q.toIndexedSeq.map(lit): _*)), lit(0.0)))
+      .orderBy($"score".desc, $"doc_id", $"chunk_index")
+      .limit(k)
+      .select($"doc_id", $"chunk_index".cast("long").as("chunk_index"), $"source", $"score")
+  }
+
+  test("Rag.topKChunks: kernel plan returns the explode/groupBy/join plan's rows and scores") {
+    val docs = Seq(
+      (1L, "spark join window " * 20, "siteA"),
+      (2L, "unrelated words entirely", "siteA"),
+      (3L, "spark join window", "siteB"),
+      (4L, "x" * 100 + " " * 100 + "join spark", "siteA"), // chunk 1 is only spaces
+      (5L, "\tspark\tjoin  window\t", "siteB"),          // tab-edged tokens
+      (6L, "caf\u00e9 spark \u6771\u4eac join", "siteA"), // non-ASCII tokens
+      (7L, null, "siteA")                                  // no chunks at all
+    ).toDF("doc_id", "text", "source")
+    for (k <- Seq(3, 100); filter <- Seq(None, Some("sitea"))) {
+      val got = Rag.topKChunks(docs, "spark join window", k, chunkSize = 100, sourceContains = filter)
+        .collect().toSeq
+      val want = explodeJoinTopK(docs, "spark join window", k, 100, filter).collect().toSeq
+      assert(got == want, s"k $k, filter $filter")
+    }
+    val all = Rag.topKChunks(docs, "spark join window", 100, chunkSize = 100).collect()
+    assert(all.exists(r => r.getLong(0) == 4L && r.getLong(1) == 1L && r.getDouble(3) == 0.0))
+    // one narrow stage: no exchange, no join, a single top-k node
+    val plan = Rag.topKChunks(docs, "spark join window", 3, chunkSize = 100,
+      sourceContains = Some("sitea")).queryExecution.executedPlan.toString
+    assert(plan.contains("TakeOrderedAndProject"), plan)
+    assert(!plan.contains("Exchange") && !plan.contains("Join") && !plan.contains("Aggregate"), plan)
+  }
+
   test("V4 augmentQuery: company tokens steer retrieval toward that company") {
     val docs = Seq(
       (1L, "acme ships spark pipelines", "siteA"),
