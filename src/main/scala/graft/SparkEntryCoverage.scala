@@ -46,7 +46,8 @@ object SparkEntryCoverage {
     * columnar scan of a pair-count-bounded table. Keyed by
     * (applicationId, dir) so a fresh SparkContext rebuilds; the
     * schema rides along for the explicit-schema read-back (an empty
-    * pair set writes a fileless dir — the writeDupGraph rule).
+    * pair set writes a fileless dir — the read-back rule of
+    * Io.readStamped).
     */
   private val docPairsCache =
     scala.collection.concurrent.TrieMap.empty[String, (String, StructType)]
@@ -5027,18 +5028,9 @@ object SparkEntryCoverage {
         .map(_.getAs[scala.collection.Seq[Float]]("embedding").map(_.toDouble).toArray)
       val subDim = 8
       val cents = full.toSeq
-      def dot(a: Array[Double], b: Array[Double]): Double = {
-        var x = 0.0; var i = 0
-        while (i < math.min(a.length, b.length)) { x += a(i) * b(i); i += 1 }
-        x
-      }
-      def cos(a: Array[Double], b: Array[Double]): Double = {
-        val d = math.sqrt(dot(a, a)) * math.sqrt(dot(b, b))
-        if (d == 0.0) 0.0 else dot(a, b) / d
-      }
       val donorRes = donors.map { v =>
         val cell = cents.zipWithIndex
-          .map { case (c, i) => (cos(v, c), i) }
+          .map { case (c, i) => (Similarity.cosine(v, c), i) }
           .maxBy { case (sim, i) => (sim, i) }
           ._2
         v.zip(cents(cell)).map { case (x, y) => x - y }
@@ -5335,18 +5327,9 @@ object SparkEntryCoverage {
         .map(_.getAs[scala.collection.Seq[Float]]("embedding").map(_.toDouble).toArray)
       val subDim = 8
       val cents = full.toSeq
-      def dot(a: Array[Double], b: Array[Double]): Double = {
-        var x = 0.0; var i = 0
-        while (i < math.min(a.length, b.length)) { x += a(i) * b(i); i += 1 }
-        x
-      }
-      def cos(a: Array[Double], b: Array[Double]): Double = {
-        val d = math.sqrt(dot(a, a)) * math.sqrt(dot(b, b))
-        if (d == 0.0) 0.0 else dot(a, b) / d
-      }
       val donorRes = donors.map { v =>
         val cell = cents.zipWithIndex
-          .map { case (c, i) => (cos(v, c), i) }
+          .map { case (c, i) => (Similarity.cosine(v, c), i) }
           .maxBy { case (sim, i) => (sim, i) }
           ._2
         v.zip(cents(cell)).map { case (x, y) => x - y }
@@ -5456,20 +5439,11 @@ object SparkEntryCoverage {
         .map(_.getAs[scala.collection.Seq[Float]]("embedding").map(_.toDouble).toArray)
       val subDim = 8
       val cents = full.toSeq
-      def dot(a: Array[Double], b: Array[Double]): Double = {
-        var x = 0.0; var i = 0
-        while (i < math.min(a.length, b.length)) { x += a(i) * b(i); i += 1 }
-        x
-      }
-      def cos(a: Array[Double], b: Array[Double]): Double = {
-        val d = math.sqrt(dot(a, a)) * math.sqrt(dot(b, b))
-        if (d == 0.0) 0.0 else dot(a, b) / d
-      }
       // donor residuals w.r.t. their assigned cell — ties to the
       // larger cell, the ivfAssign/oracle convention
       val donorRes = donors.map { v =>
         val cell = cents.zipWithIndex
-          .map { case (c, i) => (cos(v, c), i) }
+          .map { case (c, i) => (Similarity.cosine(v, c), i) }
           .maxBy { case (sim, i) => (sim, i) }
           ._2
         v.zip(cents(cell)).map { case (x, y) => x - y }
@@ -5513,18 +5487,9 @@ object SparkEntryCoverage {
         .map(_.getAs[scala.collection.Seq[Float]]("embedding").map(_.toDouble).toArray)
       val subDim = 8
       val cents = full.toSeq
-      def dot(a: Array[Double], b: Array[Double]): Double = {
-        var x = 0.0; var i = 0
-        while (i < math.min(a.length, b.length)) { x += a(i) * b(i); i += 1 }
-        x
-      }
-      def cos(a: Array[Double], b: Array[Double]): Double = {
-        val d = math.sqrt(dot(a, a)) * math.sqrt(dot(b, b))
-        if (d == 0.0) 0.0 else dot(a, b) / d
-      }
       val donorRes = donors.map { v =>
         val cell = cents.zipWithIndex
-          .map { case (c, i) => (cos(v, c), i) }
+          .map { case (c, i) => (Similarity.cosine(v, c), i) }
           .maxBy { case (sim, i) => (sim, i) }
           ._2
         v.zip(cents(cell)).map { case (x, y) => x - y }

@@ -15,6 +15,22 @@ import org.apache.spark.sql.{Column, DataFrame}
   */
 object Similarity {
 
+  /** Driver-side cosine of two dense vectors over their common prefix:
+    * dot, |a|² and |b|² folded left-to-right in one pass, the
+    * [[graft.expressions.CosineSimilarity]] kernel's fold, so a
+    * driver-computed score is bit-identical to the in-plan one. 0.0
+    * when either norm is zero.
+    */
+  private[graft] def cosine(a: Array[Double], b: Array[Double]): Double = {
+    val n = math.min(a.length, b.length)
+    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+    while (i < n) {
+      dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1
+    }
+    val d = math.sqrt(na) * math.sqrt(nb)
+    if (d == 0.0) 0.0 else dot / d
+  }
+
   /** Exact cosine top-k for one query vector; optional pre-filter is
     * pushed BELOW the score computation (strictly better than the
     * reference's over-fetch-then-filter, SURVEY §2.9 V3).
@@ -710,16 +726,6 @@ object Similarity {
       s"mmrRerank pool exceeds maxPool=$maxPool rows — candidates must be a bounded " +
         "retrieval shortlist (top-N upstream), not a corpus-proportional frame; " +
         "raise maxPool only if the driver can hold the pool")
-    // the kernel fold: dot/normA/normB accumulated left-to-right
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      val n = math.min(a.length, b.length)
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < n) {
-        dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1
-      }
-      val denom = math.sqrt(na) * math.sqrt(nb)
-      if (denom == 0.0) 0.0 else dot / denom
-    }
     val picked = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Double, Double)]
     val selected = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Double])]
     var rank = 1
@@ -729,7 +735,7 @@ object Similarity {
         .map { case (id, rel, v) =>
           val pen =
             if (selected.isEmpty) 0.0
-            else selected.iterator.map(s => cos(v, s._2)).max
+            else selected.iterator.map(s => cosine(v, s._2)).max
           (id, rel, lambda * rel - penalty * pen, v)
         }
         // argmax by (mmr desc, id asc) — deterministic tie-break
@@ -857,15 +863,6 @@ object Similarity {
     import spark.implicits._
     if (pool.isEmpty)
       return Seq.empty[(Int, Long, Option[Double])].toDF("rank", idCol, "dist")
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      val n = math.min(a.length, b.length)
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < n) {
-        dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1
-      }
-      val denom = math.sqrt(na) * math.sqrt(nb)
-      if (denom == 0.0) 0.0 else dot / denom
-    }
     val selected = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Double])]
     val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Option[Double])]
     val seed = pool.minBy(_._1)
@@ -878,7 +875,7 @@ object Similarity {
         .map { case (id, v) =>
           // min over picks of (1.0 - cos) elementwise — the exact
           // expression the SQL mirror evaluates, not 1 - max(cos)
-          (id, v, selected.iterator.map(s => 1.0 - cos(v, s._2)).min)
+          (id, v, selected.iterator.map(s => 1.0 - cosine(v, s._2)).min)
         }
         .reduceLeft { (x, y) =>
           if (y._3 > x._3 || (y._3 == x._3 && y._1 < x._1)) y else x
@@ -912,14 +909,6 @@ object Similarity {
         case f: Float  => f.toDouble
         case d: Double => d
       }.toArray
-    def cosDist(a: Array[Double], b: Array[Double]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < math.min(a.length, b.length)) {
-        dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1
-      }
-      val d = math.sqrt(na) * math.sqrt(nb)
-      if (d == 0.0) 1.0 else 1.0 - dot / d
-    }
     // k-means++ init (seeded, deterministic) on a hash-spread sample:
     // the first-k-by-id alternative is quality-blind — adjacent ids
     // are often correlated, seeding several centroids into one dense
@@ -942,7 +931,7 @@ object Similarity {
         val chosen = scala.collection.mutable.ArrayBuffer(sample(rnd.nextInt(sample.length)))
         // minDist2(i) = squared cosine-distance of sample(i) to its
         // nearest chosen centroid; D² weighting is the k-means++ rule
-        val minDist2 = sample.map(v => { val d = cosDist(v, chosen.head); d * d })
+        val minDist2 = sample.map(v => { val d = 1.0 - cosine(v, chosen.head); d * d })
         while (chosen.size < k) {
           val total = minDist2.sum
           val idx =
@@ -957,7 +946,7 @@ object Similarity {
           chosen += c
           var i = 0
           while (i < sample.length) {
-            val d = cosDist(sample(i), c)
+            val d = 1.0 - cosine(sample(i), c)
             if (d * d < minDist2(i)) minDist2(i) = d * d
             i += 1
           }
@@ -995,16 +984,8 @@ object Similarity {
       query: Array[Double],
       k: Int,
       nprobe: Int): DataFrame = {
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < math.min(a.length, b.length)) {
-        dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1
-      }
-      val d = math.sqrt(na) * math.sqrt(nb)
-      if (d == 0.0) 0.0 else dot / d
-    }
     val probeCells = centroids.zipWithIndex
-      .map { case (c, i) => (cos(query, c), i) }
+      .map { case (c, i) => (cosine(query, c), i) }
       .sortBy(-_._1)
       .take(nprobe)
       .map(_._2)
@@ -1044,16 +1025,8 @@ object Similarity {
       shortlist: Int,
       k: Int,
       idCol: String = "vec_id"): DataFrame = {
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < math.min(a.length, b.length)) {
-        dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1
-      }
-      val d = math.sqrt(na) * math.sqrt(nb)
-      if (d == 0.0) 0.0 else dot / d
-    }
     val probeCells = centroids.zipWithIndex
-      .map { case (c, i) => (cos(query, c), i) }
+      .map { case (c, i) => (cosine(query, c), i) }
       .sortBy(-_._1)
       .take(nprobe)
       .map(_._2)
@@ -1745,12 +1718,8 @@ object Similarity {
       while (i < math.min(a.length, b.length)) { s += a(i) * b(i); i += 1 }
       s
     }
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      val d = math.sqrt(dot(a, a)) * math.sqrt(dot(b, b))
-      if (d == 0.0) 0.0 else dot(a, b) / d
-    }
     val probeCells = centroids.zipWithIndex
-      .map { case (c, i) => (cos(query, c), i) }
+      .map { case (c, i) => (cosine(query, c), i) }
       .sortBy(-_._1)
       .take(nprobe)
       .map(_._2)

@@ -187,7 +187,7 @@ object Io {
       .format("parquet")
       .saveAsTable(table)
 
-  // ---- persistent ANN indexes -------------------------------------
+  // ---- persistent artifacts: one seq-versioned lifecycle ------------
   //
   // The reference's vector index is PERSISTENT: built once, queried
   // many times, upserted incrementally (Pinecone auto-create-then-
@@ -200,11 +200,247 @@ object Io {
   // reads only the probed cells' directories (partition pruning does
   // the nprobe/nlist read at the FILE level, not with a post-scan
   // filter).
+  //
+  // Every derived artifact below (IVF cells, PQ codes, postings, phash
+  // codes, dup-graph pairs, MinHash signatures, LM count grids, value
+  // grid) runs ONE lifecycle, implemented once by the primitives in
+  // this section:
+  //
+  //   write    the base build lands at stamp `__seq` = 0 (overwrite);
+  //            an upsert APPENDS its rows at a caller stamp > 0 —
+  //            no existing file is rewritten ([[writeStamped]])
+  //   delete   a seq-stamped row per id in the `_tombstones` sidecar
+  //            ([[writeTombstones]]); the linear families append the
+  //            removed rows' counts NEGATED instead
+  //   resolve  live, or AS OF a stamp (rows and tombstones restricted
+  //            to stamps <= the clock — time travel is a FILTER, not a
+  //            restore), in one of four shapes:
+  //              row-versioned (IVF cells, PQ codes, phash, MinHash
+  //                sigs): last-wins per id minus the tombstones at or
+  //                above the row's stamp ([[readLastWins]])
+  //              edge set (dup-graph pairs): union; a tombstone hides
+  //                the pairs on either endpoint ([[hideTombstoned]])
+  //              doc-versioned (postings): max stamp per doc from the
+  //                `_docseq` sidecar, joined back
+  //              linear counts (LM uni/bi, value grid): sum-merge, keys
+  //                whose count reaches zero drop ([[sumMerged]])
+  //   compact  the resolved view rewritten as ONE stamp-0 generation,
+  //            staged and swapped in, tombstones purged — pre-compaction
+  //            as-of states are forfeited ([[compactDir]])
+  //
+  // Each family is configuration (directories, id column, bucket
+  // column) plus its own encoding: IVF centroids, PQ codebooks, the
+  // dup-graph closure and label swap, the postings `_docseq`/`_doclen`
+  // sidecars, the value grid's declared bound. ArtifactContractSpec
+  // runs the shared clauses over all eight.
+
+  /** The one stamp guard: stamp 0 belongs to the base build (and to
+    * compaction's rewrite), so every upsert and delete carries a
+    * positive stamp; callers use distinct stamps per operation.
+    */
+  private def requireStamp(seq: Long, op: String): Unit =
+    require(seq > 0L, s"$op seq must be positive (0 is the base build's stamp)")
+
+  /** hash(`key`) mod `buckets` — the bounded bucket every bucketed
+    * family partitions by (one directory per bucket, never per key:
+    * key-sized directory listings are their own scale problem).
+    */
+  private def bucketOf(key: String, buckets: Int): Column =
+    pmod(xxhash64(col(key)), lit(buckets.toLong))
+
+  /** Write `df` to `dir`, partitioned by `part` if given. A partitioned
+    * write is clustered by its partition column first (REBALANCE-
+    * before-partitionBy): each partition lands in ONE task → one file
+    * per partition per generation, instead of a file per (task ×
+    * partition) that every later read/copy pays in listing. At
+    * production scale the bucket modulus is the file-sizing knob.
+    */
+  private def writeDir(df: DataFrame, dir: String, part: Option[String], mode: String): Unit = {
+    val w = part.fold(df)(p => df.repartition(col(p))).write.mode(mode)
+    part.fold(w)(p => w.partitionBy(p)).parquet(dir)
+  }
+
+  /** The stamped write: no `upsertSeq` overwrites `dir` with the base
+    * at stamp 0; `Some(seq)` appends at `seq` after the stamp guard.
+    * Base rows carry the stamp too, so every file under `dir` shares
+    * ONE schema with later appends (mixed parquet schemas under a
+    * directory read back nondeterministically without mergeSchema).
+    * Returns the written schema, for families that persist it.
+    */
+  private def writeStamped(
+      df: DataFrame,
+      dir: String,
+      part: Option[String],
+      upsertSeq: Option[Long] = None): StructType = {
+    upsertSeq.foreach(requireStamp(_, "upsert"))
+    val stamped = df.withColumn("__seq", lit(upsertSeq.getOrElse(0L)))
+    writeDir(stamped, dir, part, if (upsertSeq.isEmpty) "overwrite" else "append")
+    stamped.schema
+  }
+
+  /** Read a stamped dir: with the family's persisted schema when it
+    * has one (an EMPTY artifact writes a fileless dir, and schema
+    * inference on it throws — supplied, it reads as an empty frame),
+    * `__seq` defaulted to 0, and restricted to stamps <= `asOf`.
+    */
+  private def readStamped(
+      spark: SparkSession,
+      dir: String,
+      schema: Option[StructType] = None,
+      asOf: Option[Long] = None): DataFrame = {
+    asOf.foreach(m => require(m >= 0L, "asOfSeq must be >= 0"))
+    val rows = schema.fold(spark.read)(s => spark.read.schema(s)).parquet(dir)
+      .withColumn("__seq", coalesce(col("__seq"), lit(0L)))
+    asOf.fold(rows)(m => rows.filter(col("__seq") <= m))
+  }
+
+  // ---- tombstone deletes (takedown / right-to-be-forgotten) -------
+  //
+  // A training-data engine must be able to REMOVE documents from its
+  // persisted artifacts — takedown requests, licensing reversals,
+  // contamination discoveries — without rewriting a 100 TB index. The
+  // discipline is the upsert one inverted: deletes land as seq-stamped
+  // tombstone rows in an underscore sidecar (invisible to the data
+  // scan, append-only, no existing file rewritten), and the readers
+  // treat a tombstone at stamp s as deleting every version with stamp
+  // <= s — so delete-then-reupsert restores the doc, and
+  // upsert-then-delete removes it, purely by seq order. Physical
+  // purging is compaction's job; the tombstone makes the doc
+  // UNSERVABLE immediately, which is what the request requires.
+
+  /** One (id, seq) row per distinct id in `ids`' first column — a
+    * tombstone, or (with its `deleted` flag) a postings doc version.
+    */
+  private def idStamps(ids: DataFrame, seq: Long): DataFrame =
+    ids.select(col(ids.columns.head).as("id")).distinct().withColumn("seq", lit(seq))
+
+  private def writeTombstones(ids: DataFrame, path: String, seq: Long): Unit = {
+    requireStamp(seq, "delete")
+    idStamps(ids, seq).write.mode("append").parquet(s"$path/_tombstones")
+  }
+
+  /** Drop the rows of `rows` (which carry `__seq`) where any of
+    * `idCols` has a tombstone at or above the row's stamp. `asOf`
+    * restricts which tombstones are VISIBLE (the as-of read's clock).
+    */
+  private def hideTombstoned(
+      rows: DataFrame,
+      idCols: Seq[String],
+      path: String,
+      asOf: Option[Long]): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(s"$path/_tombstones")
+    if (!p.getFileSystem(rows.sparkSession.sessionState.newHadoopConf()).exists(p)) rows
+    else {
+      val all = rows.sparkSession.read.parquet(s"$path/_tombstones")
+      val tmax = asOf.fold(all)(m => all.filter(col("seq") <= m))
+        .groupBy(col("id").as("__tid"))
+        .agg(max(col("seq")).as("__tseq"))
+      idCols.foldLeft(rows)((r, id) =>
+        r.join(tmax, col(id) === col("__tid") && col("__seq") <= col("__tseq"), "left_anti"))
+    }
+  }
+
+  /** The row-versioned resolution: the LATEST version of every
+    * `idCol` under `dir` (max `__seq`; ties broken to the base —
+    * callers use distinct positive stamps), minus tombstoned ids, at
+    * the `asOf` clock or live. One window shuffle on the id — the
+    * read-side cost of the append-only write path. Stamps dropped.
+    */
+  private def readLastWins(
+      spark: SparkSession,
+      path: String,
+      dir: String,
+      idCol: String,
+      schema: Option[StructType] = None,
+      asOf: Option[Long] = None): DataFrame = {
+    val latest = graft.operators.Relational.dedupeFirstWins(
+      readStamped(spark, dir, schema, asOf), Seq(col(idCol)), Seq(col("__seq").desc))
+    hideTombstoned(latest, Seq(idCol), path, asOf).drop("__seq")
+  }
+
+  /** The linear-counts resolution: SUM `count` per `keys`; keys whose
+    * merged count reaches 0 DROP (a taken-down doc's keys vanish
+    * exactly as a rebuild without it would produce).
+    */
+  private def sumMerged(rows: DataFrame, keys: Seq[String], count: String): DataFrame =
+    rows.groupBy(keys.map(col): _*).agg(sum(col(count)).as(count)).filter(col(count) > 0L)
+
+  /** Compaction — the physical-purge half of the tombstone story and
+    * the cure for append-only accumulation: `resolved` (the family's
+    * live view with its partition column) is written as ONE stamp-0
+    * generation to a staging sibling, swapped over `dir`, and the
+    * `_tombstones` sidecar of `purgeTombstonesOf` deleted — the
+    * compacted base holds only LIVE rows, so keeping the tombstones
+    * would wrongly re-hide ids re-upserted before compaction. Never
+    * overwrite a path while lazily reading it: the stage is complete
+    * before `dir` is touched.
+    */
+  private def compactDir(
+      resolved: DataFrame,
+      dir: String,
+      part: Option[String],
+      purgeTombstonesOf: Option[String] = None): Unit = {
+    val spark = resolved.sparkSession
+    writeStamped(resolved, stagingOf(dir), part)
+    swapDir(spark, stagingOf(dir), dir)
+    purgeTombstonesOf.foreach(p => deleteDir(spark, s"$p/_tombstones"))
+  }
+
+  /** The staging sibling a compaction of `dir` writes first. */
+  private def stagingOf(dir: String): String = s"${dir}_compacting"
+
+  /** An artifact's identity rides with it in the underscore `_meta`
+    * child (invisible to the data scan): the bucket modulus — a
+    * guessed mismatch would prune to the WRONG partitions and make
+    * lookups silently return empty — and the persisted schemas of the
+    * explicit-schema read-backs.
+    */
+  private def writeMeta(meta: DataFrame, path: String): Unit =
+    meta.coalesce(1).write.mode("overwrite").parquet(s"$path/_meta")
+
+  /** `path/_meta`'s bucket modulus and the named persisted schemas
+    * (one tiny job).
+    */
+  private def readMeta(
+      spark: SparkSession,
+      path: String,
+      schemas: String*): (Int, Seq[StructType]) = {
+    val m = spark.read.parquet(s"$path/_meta").select(("buckets" +: schemas).map(col): _*).head()
+    (m.getInt(0), schemas.indices.map(i => schemaOf(m.getString(i + 1))))
+  }
+
+  private def schemaOf(json: String): StructType =
+    org.apache.spark.sql.types.DataType.fromJson(json).asInstanceOf[StructType]
+
+  private def deleteDir(spark: SparkSession, path: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    if (fs.exists(p)) { fs.delete(p, true); () }
+  }
+
+  /** Replace `dst` with the fully-written staged dir `src` by rename —
+    * the staged-swap step for artifact maintenance without the old
+    * read-back + rewrite (which paid the table's I/O twice per swap).
+    * Crash contract: `src` is complete before `dst` is touched, so an
+    * interrupted swap re-runs from the stage. On object stores without
+    * atomic rename the FS client copies server-side — still cheaper
+    * than pulling the table through Spark again.
+    */
+  private def swapDir(spark: SparkSession, src: String, dst: String): Unit = {
+    val s = new org.apache.hadoop.fs.Path(src)
+    val d = new org.apache.hadoop.fs.Path(dst)
+    val fs = s.getFileSystem(spark.sessionState.newHadoopConf())
+    if (fs.exists(d)) fs.delete(d, true)
+    if (!fs.rename(s, d))
+      throw new java.io.IOException(s"swapDir: rename $src -> $dst failed")
+  }
+
+  // ---- IVF index (row-versioned: `cells`, id = caller's idCol) ------
 
   /** Persist an IVF index: `path/centroids` (cell, centroid) and
     * `path/cells` — the corpus with its cell assignment, partitioned
-    * by cell. Loading + `ivfTopK` must return exactly what the
-    * in-line fit returned for the same centroids.
+    * by cell, at stamp 0. Loading + `ivfTopK` must return exactly what
+    * the in-line fit returned for the same centroids.
     */
   def writeIvfIndex(
       assigned: DataFrame,
@@ -217,73 +453,246 @@ object Io {
       .toDF("cell", "centroid")
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$path/centroids")
-    // base rows carry upsert-stamp 0 so the cell files share ONE
-    // schema with later upsertIvfIndex appends (mixed parquet schemas
-    // under a directory read back nondeterministically without
-    // mergeSchema)
-    assigned
-      .withColumn("__seq", lit(0L))
-      // file-per-cell write (REBALANCE-before-partitionBy, the
-      // dup-graph rule): without it every task emits a sliver into
-      // every cell directory
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells")
+    writeStamped(assigned, s"$path/cells", Some("cell"))
   }
+
+  private def readCentroids(spark: SparkSession, path: String): Seq[Array[Double]] =
+    spark.read.parquet(s"$path/centroids")
+      .orderBy(col("cell"))
+      .collect()
+      .map(_.getAs[scala.collection.Seq[Double]]("centroid").toArray)
+      .toSeq
 
   /** Load an IVF index written by [[writeIvfIndex]]: (centroids in
     * cell order, assigned corpus). Filters on `cell` prune to the
     * probed partition directories. Upsert stamps are dropped — use
     * [[readIvfIndexLatest]] when the index has live upserts.
     */
+  def readIvfIndex(spark: SparkSession, path: String): (Seq[Array[Double]], DataFrame) =
+    (readCentroids(spark, path), spark.read.parquet(s"$path/cells").drop("__seq"))
+
+  /** Incremental IVF upsert — the reference's index maintenance shape
+    * (Pinecone upserts vectors into an EXISTING index; the fit is
+    * never repeated): `assigned` (new/changed vectors already
+    * cell-assigned against the index's frozen centroids via
+    * [[graft.operators.Similarity.ivfAssign]]) lands as an APPEND to
+    * the cell-partitioned layout, stamped with `seq` — a caller
+    * batch number that must increase per upsert. No rewrite of
+    * existing files, no shuffle of the existing index: the append
+    * touches only the incoming rows' cell directories.
+    * [[readIvfIndexLatest]] resolves replaced ids last-wins on the
+    * stamp. (Re-fitting centroids is a REBUILD, not an upsert —
+    * assignment against frozen centroids is what keeps the increment
+    * cheap, at the cost of drift the operator's caller monitors.)
+    */
+  def upsertIvfIndex(assigned: DataFrame, path: String, seq: Long): Unit =
+    writeStamped(assigned, s"$path/cells", Some("cell"), Some(seq))
+
+  /** Tombstone-delete vectors from a persisted IVF index: `ids` (one
+    * column, the vector ids) become unservable to
+    * [[readIvfIndexLatest]] from this stamp on — no cell file is
+    * rewritten. Re-upserting an id at a HIGHER stamp restores it.
+    */
+  def deleteIvfIds(ids: DataFrame, path: String, seq: Long): Unit =
+    writeTombstones(ids, path, seq)
+
+  /** Load an IVF index with upserts and tombstones applied: centroids
+    * + the LATEST live version of every vector ([[readLastWins]] per
+    * `idCol`).
+    */
+  def readIvfIndexLatest(
+      spark: SparkSession,
+      path: String,
+      idCol: String): (Seq[Array[Double]], DataFrame) =
+    (readCentroids(spark, path), readLastWins(spark, path, s"$path/cells", idCol))
+
+  /** TIME TRAVEL over the seq-versioned IVF layout:
+    * [[readIvfIndexLatest]] restricted to upserts and tombstones with
+    * stamps <= `asOfSeq` — the index exactly as it stood before later
+    * batches landed. The versioned upsert layout (stamped appends,
+    * never in-place rewrites) is what makes this a FILTER rather
+    * than a restore: reproduce yesterday's retrieval for an audit,
+    * bisect a quality regression to the batch that introduced it, or
+    * roll a bad upsert back by re-publishing its predecessor. As-of
+    * the max stamp == [[readIvfIndexLatest]].
+    */
+  def readIvfIndexAsOf(
+      spark: SparkSession,
+      path: String,
+      idCol: String,
+      asOfSeq: Long): (Seq[Array[Double]], DataFrame) =
+    (readCentroids(spark, path),
+      readLastWins(spark, path, s"$path/cells", idCol, asOf = Some(asOfSeq)))
+
+  /** Compact a persisted IVF index: the effective corpus (upserts
+    * last-wins, tombstones applied) becomes the new stamp-0 base, the
+    * tombstone sidecar is purged. [[readIvfIndex]] afterwards serves
+    * exactly what [[readIvfIndexLatest]] served before.
+    */
+  def compactIvfIndex(spark: SparkSession, path: String, idCol: String): Unit =
+    compactDir(
+      readLastWins(spark, path, s"$path/cells", idCol), s"$path/cells", Some("cell"), Some(path))
+
+  /** The IVF index's coarse centroids as a FRAME — (cell int,
+    * ce array<double>), the exact shape
+    * [[graft.operators.Similarity.ivfPqTopKBatch]] consumes. The
+    * single-query readers ([[readIvfIndex]]) collect the centroid
+    * table into driver literals because a one-off probe bakes its
+    * query into the plan anyway; the BATCHED serving path must stay
+    * literal-free end-to-end, so this reader keeps the nlist-bounded
+    * table in-plan — Catalyst broadcasts it into the probe
+    * crossJoin, nothing ever touches the driver.
+    */
+  def readIvfCentroidFrame(spark: SparkSession, path: String): DataFrame =
+    spark.read.parquet(s"$path/centroids")
+      .select(
+        col("cell").cast("int").as("cell"),
+        col("centroid").cast("array<double>").as("ce"))
+
+  // ---- PQ index (row-versioned: `codes`, unpartitioned) -------------
+
+  /** Persist a PQ index: `path/codebooks` (sub, cell, centroid) and
+    * `path/codes` — the byte-coded corpus (the pq_* columns replace
+    * the full vectors in the scan; keep the embedding column in
+    * `codes` only if the exact re-rank should read it from the index
+    * rather than joining back to the corpus).
+    */
+  def writePqIndex(
+      codes: DataFrame,
+      codebooks: Seq[Seq[Array[Double]]],
+      path: String): Unit = {
+    val spark = codes.sparkSession
+    import spark.implicits._
+    codebooks.zipWithIndex
+      .flatMap { case (subCents, s) =>
+        subCents.zipWithIndex.map { case (c, i) => (s, i, c.toSeq) }
+      }
+      .toDF("sub", "cell", "centroid")
+      .coalesce(1)
+      .write.mode("overwrite").parquet(s"$path/codebooks")
+    writeStamped(codes, s"$path/codes", None)
+  }
+
+  /** Load a PQ index written by [[writePqIndex]]: (codebooks indexed
+    * [sub][cell], coded corpus). Upsert stamps are dropped — use
+    * [[readPqIndexLatest]] when the index has live upserts.
+    */
+  def readPqIndex(
+      spark: SparkSession,
+      path: String): (Seq[Seq[Array[Double]]], DataFrame) =
+    (readPqCodebooks(spark, path), spark.read.parquet(s"$path/codes").drop("__seq"))
+
+  /** Incremental PQ upsert — [[upsertIvfIndex]]'s mirror for the
+    * byte-coded layout: `codes` (new/changed vectors already ENCODED
+    * against the index's FROZEN codebooks via
+    * [[graft.operators.Similarity.pqEncode]]) appends with a caller
+    * seq stamp; no rewrite of existing files, no re-fit.
+    * [[readPqIndexLatest]] resolves replaced ids last-wins on the
+    * stamp. (Re-fitting codebooks is a REBUILD — encoding against
+    * frozen codebooks keeps the increment cheap at the cost of drift
+    * the caller monitors, the exact IVF-centroid tradeoff.)
+    */
+  def upsertPqIndex(codes: DataFrame, path: String, seq: Long): Unit =
+    writeStamped(codes, s"$path/codes", None, Some(seq))
+
+  /** Tombstone-delete coded vectors from a persisted PQ index — the
+    * [[deleteIvfIds]] mirror for the byte-coded layout.
+    */
+  def deletePqIds(ids: DataFrame, path: String, seq: Long): Unit =
+    writeTombstones(ids, path, seq)
+
+  /** Load a PQ index with upserts and tombstones applied: codebooks +
+    * the LATEST live version of every code row — identical to
+    * [[readIvfIndexLatest]]'s contract.
+    */
+  def readPqIndexLatest(
+      spark: SparkSession,
+      path: String,
+      idCol: String): (Seq[Seq[Array[Double]]], DataFrame) =
+    (readPqCodebooks(spark, path), readLastWins(spark, path, s"$path/codes", idCol))
+
+  /** Time-travel read of a PQ index AS OF `asOfSeq`: code rows and
+    * tombstones restricted to stamps <= the clock, then
+    * [[readPqIndexLatest]]'s resolution. Codebooks are frozen at build
+    * time, so they need no clock.
+    */
+  def readPqIndexAsOf(
+      spark: SparkSession,
+      path: String,
+      idCol: String,
+      asOfSeq: Long): (Seq[Seq[Array[Double]]], DataFrame) =
+    (readPqCodebooks(spark, path),
+      readLastWins(spark, path, s"$path/codes", idCol, asOf = Some(asOfSeq)))
+
+  /** Compact a persisted PQ index — [[compactIvfIndex]]'s mirror for
+    * the byte-coded layout.
+    */
+  def compactPqIndex(spark: SparkSession, path: String, idCol: String): Unit =
+    compactDir(readLastWins(spark, path, s"$path/codes", idCol), s"$path/codes", None, Some(path))
+
+  private def readPqCodebooks(spark: SparkSession, path: String): Seq[Seq[Array[Double]]] =
+    spark.read.parquet(s"$path/codebooks")
+      .orderBy(col("sub"), col("cell"))
+      .collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getAs[scala.collection.Seq[Double]](2).toArray))
+      .groupBy(_._1)
+      .toSeq
+      .sortBy(_._1)
+      .map(_._2.sortBy(_._2).map(_._3).toSeq)
+
+  /** The PQ index's codebooks as a FRAME — (s int, code int,
+    * be array<double>), [[graft.operators.Similarity.ivfPqTopKBatch]]'s
+    * codebook shape: one row per (subspace, code word). S·K rows
+    * total (bounded by the index geometry, never the corpus), kept
+    * in-plan for the batched ADC-table build — the collect-backed
+    * [[readPqCodebooks]] stays the single-query bootstrap's reader.
+    */
+  def readPqCodebookFrame(spark: SparkSession, path: String): DataFrame =
+    spark.read.parquet(s"$path/codebooks")
+      .select(
+        col("sub").cast("int").as("s"),
+        col("cell").cast("int").as("code"),
+        col("centroid").cast("array<double>").as("be"))
+
+  // ---- postings (doc-versioned: root dir, `_docseq`/`_doclen`) -------
+
   /** Persist a positional inverted index
     * (`TextAnalysis.invertedIndex` output) partitioned by a bounded
-    * TERM-HASH bucket — one directory per bucket (never per term:
-    * vocab-sized directory listings are their own scale problem), so
-    * a phrase query that pre-filters to its terms' buckets prunes the
-    * scan to a handful of partitions at any index size.
+    * TERM-HASH bucket, so a phrase query that pre-filters to its
+    * terms' buckets prunes the scan to a handful of partitions at any
+    * index size. The modulus persists in `_meta` ([[postingsBuckets]]
+    * reads it back).
     */
   def writePostings(index: DataFrame, path: String, buckets: Int = 64): Unit = {
     require(buckets > 0, "buckets must be positive")
     val spark = index.sparkSession
     import spark.implicits._
-    // base rows carry upsert-stamp 0 (the writeIvfIndex rule: one
-    // schema shared with upsertPostings appends)
-    index
-      .withColumn("term_bucket", pmod(xxhash64(col("term")), lit(buckets.toLong)))
-      .withColumn("__seq", lit(0L))
-      // file-per-bucket write (the dup-graph rule)
-      .repartition(col("term_bucket"))
-      .write
-      .mode("overwrite")
-      .partitionBy("term_bucket")
-      .parquet(path)
-    // doc-version sidecar (underscore dir — invisible to the data
-    // scan): one (id, seq) row per indexed doc version, so the
-    // read-side last-wins resolution aggregates a doc-count-bounded
-    // slim table instead of re-scanning the whole postings index for
-    // the per-doc max stamp
-    index.select(col("id")).distinct()
-      .withColumn("seq", lit(0L))
-      .withColumn("deleted", lit(false))
-      .write.mode("overwrite").parquet(s"$path/_docseq")
-    // doc-length sidecar (the Lucene-norms idea): token count per doc
-    // derived from the postings themselves, so length-normalized
-    // scoring (BM25) runs entirely off the index — no corpus scan
+    writeStamped(
+      index.withColumn("term_bucket", bucketOf("term", buckets)), path, Some("term_bucket"))
+    writeDocVersions(index, path, 0L)
+    writeMeta(Seq(buckets).toDF("buckets"), path)
+  }
+
+  /** The postings sidecars for the doc versions in `index` at `seq`
+    * (stamp 0 overwrites, the base build). `_docseq`: one (id, seq,
+    * deleted) row per doc version, so the read-side resolution
+    * aggregates a doc-count-bounded slim table instead of re-scanning
+    * the postings for the per-doc max stamp. `_doclen` (the
+    * Lucene-norms idea): token count per doc version derived from the
+    * postings themselves, so BM25 runs entirely off the index.
+    */
+  private def writeDocVersions(index: DataFrame, path: String, seq: Long): Unit = {
+    writeDocSeq(index.select(col("id")), path, seq, deleted = false)
     index.groupBy(col("id"))
       .agg(sum(size(col("positions"))).cast("long").as("dl"))
-      .withColumn("seq", lit(0L))
-      .write.mode("overwrite").parquet(s"$path/_doclen")
-    // the bucket count is part of the index's IDENTITY, so it rides
-    // with the index instead of being re-supplied (and possibly
-    // mis-supplied) at read time: an underscore-prefixed child
-    // directory is invisible to the data scan (Spark's file listing
-    // skips `_`/`.` paths), and postingsBuckets reads the modulus
-    // from here — a guessed mismatch would prune to the WRONG
-    // partitions and make phrase queries silently return empty.
-    Seq(buckets).toDF("buckets")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/_meta")
+      .withColumn("seq", lit(seq))
+      .write.mode(if (seq == 0L) "overwrite" else "append").parquet(s"$path/_doclen")
   }
+
+  private def writeDocSeq(ids: DataFrame, path: String, seq: Long, deleted: Boolean): Unit =
+    idStamps(ids, seq)
+      .withColumn("deleted", lit(deleted))
+      .write.mode(if (seq == 0L) "overwrite" else "append").parquet(s"$path/_docseq")
 
   /** Load a [[writePostings]] index. Pair with
     * `postingsBuckets(path, terms)` to pre-filter the partition
@@ -307,21 +716,11 @@ object Io {
     * increment; removing a doc entirely is [[deletePostingsDocs]].
     */
   def upsertPostings(index: DataFrame, path: String, seq: Long): Unit = {
-    require(seq > 0L, "upsert seq must be positive (0 is the base build's stamp)")
     val buckets = postingsBucketCount(index.sparkSession, path)
-    index
-      .withColumn("term_bucket", pmod(xxhash64(col("term")), lit(buckets.toLong)))
-      .withColumn("__seq", lit(seq))
-      .repartition(col("term_bucket"))
-      .write.mode("append").partitionBy("term_bucket").parquet(path)
-    index.select(col("id")).distinct()
-      .withColumn("seq", lit(seq))
-      .withColumn("deleted", lit(false))
-      .write.mode("append").parquet(s"$path/_docseq")
-    index.groupBy(col("id"))
-      .agg(sum(size(col("positions"))).cast("long").as("dl"))
-      .withColumn("seq", lit(seq))
-      .write.mode("append").parquet(s"$path/_doclen")
+    writeStamped(
+      index.withColumn("term_bucket", bucketOf("term", buckets)),
+      path, Some("term_bucket"), Some(seq))
+    writeDocVersions(index, path, seq)
   }
 
   /** Tombstone-delete whole documents from a persisted postings
@@ -332,32 +731,18 @@ object Io {
     * it. The takedown shape for the retrieval index.
     */
   def deletePostingsDocs(ids: DataFrame, path: String, seq: Long): Unit = {
-    require(seq > 0L, "delete seq must be positive (0 is the base build's stamp)")
-    ids
-      .select(col(ids.columns.head).as("id"))
-      .distinct()
-      .withColumn("seq", lit(seq))
-      .withColumn("deleted", lit(true))
-      .write.mode("append").parquet(s"$path/_docseq")
+    requireStamp(seq, "delete")
+    writeDocSeq(ids, path, seq, deleted = true)
   }
 
-  /** Load a postings index with upserts applied: each doc's LATEST
-    * version's postings only (doc-level max stamp from the `_docseq`
-    * sidecar — doc-count-bounded — joined back on (id, stamp)). The
-    * main index scan stays single and partition-prunable; the join
-    * key is slim. Ties on the stamp keep both versions' rows —
-    * callers must use distinct positive stamps per upsert.
-    */
   /** The live doc versions of a postings index: (\_\_did, __max_seq)
-    * for every doc whose latest sidecar row is not a tombstone.
+    * for every doc whose latest sidecar row (at the `asOf` clock) is
+    * not a tombstone.
     */
   private def livePostingsDocs(
       spark: SparkSession,
       path: String,
-      asOf: Option[Long] = None): DataFrame = {
-    // a doc's effective version is its max-stamp sidecar row; if that
-    // row is a tombstone (deletePostingsDocs), the doc serves nothing.
-    // asOf restricts the sidecar to stamps <= the as-of clock.
+      asOf: Option[Long]): DataFrame = {
     val raw = asOf.fold(spark.read.parquet(s"$path/_docseq"))(m =>
       spark.read.parquet(s"$path/_docseq").filter(col("seq") <= m))
     val withFlag =
@@ -370,38 +755,36 @@ object Io {
       .select(col("id").as("__did"), col("seq").as("__max_seq"))
   }
 
-  /** Time-travel read of a postings index AS OF `asOfSeq` — the
-    * [[readIvfIndexAsOf]]/[[readDupGraphPairsAsOf]] discipline on the
-    * third artifact family: the doc-version sidecar and the postings
-    * rows are both restricted to stamps ≤ the as-of clock, then the
-    * usual per-doc max-stamp resolution runs — so a read below a
-    * takedown's or re-index's stamp serves yesterday's index exactly
-    * (reproduce a retrieval regression against the index that
-    * produced it). As-of max(seq) == [[readPostingsLatest]]; as-of 0
-    * == the base build. Compaction forfeits pre-compaction states
-    * (one-generation rewrite), same trade as the other families.
+  private def postingsAt(spark: SparkSession, path: String, asOf: Option[Long]): DataFrame =
+    readStamped(spark, path, asOf = asOf)
+      .join(
+        livePostingsDocs(spark, path, asOf),
+        col("id") === col("__did") && col("__seq") === col("__max_seq"))
+      .drop("__did", "__max_seq", "__seq")
+
+  /** Time-travel read of a postings index AS OF `asOfSeq`: the
+    * doc-version sidecar and the postings rows are both restricted to
+    * stamps <= the as-of clock, then the usual per-doc max-stamp
+    * resolution runs — so a read below a takedown's or re-index's
+    * stamp serves yesterday's index exactly (reproduce a retrieval
+    * regression against the index that produced it). As-of max(seq)
+    * == [[readPostingsLatest]]; as-of 0 == the base build.
     */
   def readPostingsAsOf(
       spark: SparkSession,
       path: String,
-      asOfSeq: Long): DataFrame = {
-    require(asOfSeq >= 0L, "asOfSeq must be >= 0")
-    spark.read.parquet(path)
-      .withColumn("__seq", coalesce(col("__seq"), lit(0L)))
-      .filter(col("__seq") <= asOfSeq)
-      .join(
-        livePostingsDocs(spark, path, Some(asOfSeq)),
-        col("id") === col("__did") && col("__seq") === col("__max_seq"))
-      .drop("__did", "__max_seq", "__seq")
-  }
+      asOfSeq: Long): DataFrame =
+    postingsAt(spark, path, Some(asOfSeq))
 
+  /** Load a postings index with upserts applied: each doc's LATEST
+    * version's postings only (doc-level max stamp from the `_docseq`
+    * sidecar — doc-count-bounded — joined back on (id, stamp)). The
+    * main index scan stays single and partition-prunable; the join
+    * key is slim. Ties on the stamp keep both versions' rows —
+    * callers must use distinct positive stamps per upsert.
+    */
   def readPostingsLatest(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-      .withColumn("__seq", coalesce(col("__seq"), lit(0L)))
-      .join(
-        livePostingsDocs(spark, path),
-        col("id") === col("__did") && col("__seq") === col("__max_seq"))
-      .drop("__did", "__max_seq", "__seq")
+    postingsAt(spark, path, None)
 
   /** Live doc lengths (id, dl) from the `_doclen` sidecar — each live
     * doc's CURRENT version's token count. The input to index-resident
@@ -411,7 +794,7 @@ object Io {
   def readPostingsDocLengths(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(s"$path/_doclen")
       .join(
-        livePostingsDocs(spark, path),
+        livePostingsDocs(spark, path, None),
         col("id") === col("__did") && col("seq") === col("__max_seq"))
       .select(col("id"), col("dl"))
 
@@ -420,19 +803,16 @@ object Io {
     * bucketed base via [[writePostings]] with the SAME persisted
     * modulus — the doc-seq sidecar resets to stamp 0, tombstoned
     * docs' bytes are gone, and [[readPostings]] afterwards serves
-    * what [[readPostingsLatest]] served before.
+    * what [[readPostingsLatest]] served before. The stage is a
+    * SIBLING: writePostings overwrites the index root.
     */
   def compactPostings(spark: SparkSession, path: String): Unit = {
     val buckets = postingsBucketCount(spark, path)
-    // staging must be a SIBLING, not a child: writePostings overwrites
-    // the index root, which would delete a child staging dir before
-    // the rebuild reads it
-    val stage = s"${path}__compacting"
     readPostingsLatest(spark, path)
       .drop("term_bucket")
-      .write.mode("overwrite").parquet(stage)
-    writePostings(spark.read.parquet(stage), path, buckets)
-    deleteDir(spark, stage)
+      .write.mode("overwrite").parquet(stagingOf(path))
+    writePostings(spark.read.parquet(stagingOf(path)), path, buckets)
+    deleteDir(spark, stagingOf(path))
   }
 
   /** The bucket modulus `path`'s index was written with (persisted by
@@ -440,7 +820,7 @@ object Io {
     * instead of guessing.
     */
   def postingsBucketCount(spark: SparkSession, path: String): Int =
-    spark.read.parquet(s"$path/_meta").head().getInt(0)
+    readMeta(spark, path)._1
 
   /** The partition buckets `writePostings` assigned to `terms` — the
     * pruning predicate for a phrase query over a loaded index. The
@@ -456,14 +836,14 @@ object Io {
     val buckets = postingsBucketCount(spark, path)
     terms
       .toDF("term")
-      .select(pmod(xxhash64(col("term")), lit(buckets.toLong)))
+      .select(bucketOf("term", buckets))
       .collect()
       .map(_.getLong(0))
       .distinct
       .toSeq
   }
 
-  // ---- persistent near-dup pair graph -----------------------------
+  // ---- persistent near-dup pair graph (edge set: `pairs`) -----------
   //
   // The near-dup pair pipeline (shingle → band → verify) and its
   // transitive closure are, after the ANN index build, the most
@@ -472,11 +852,10 @@ object Io {
   // leakage-safe splits, golden-record resolution. At 100 TB that
   // pipeline is a many-hour scan; re-deriving it inside every
   // consumer query multiplies it per consumer. These sinks make it a
-  // build-once artifact, the same pattern as the IVF/PQ/postings
-  // indexes above: pairs and cluster labels land as parquet
-  // partitioned by an id-hash bucket (bounded directory count; a
-  // per-doc neighbor or label lookup prunes to one bucket), and every
-  // consumer loads instead of re-deriving.
+  // build-once artifact: pairs and cluster labels land as parquet
+  // partitioned by an id-hash bucket (a per-doc neighbor or label
+  // lookup prunes to one bucket), and every consumer loads instead of
+  // re-deriving.
 
   /** Persist a near-dup pair graph: `path/pairs` (the verified edge
     * list, partitioned by `pair_bucket` = hash(id_a) mod `buckets`)
@@ -490,10 +869,11 @@ object Io {
     * Labels cover ids that appear in at least one pair — singleton
     * docs are absent by construction and consumers restore them with
     * `coalesce(cluster_id, id)`, the same rule the in-line
-    * clusterPairs consumers already apply. The bucket modulus is
-    * persisted in `path/_meta` (the postings-index guard): readers
-    * never guess it. `checkpointDir` passes through to the closure's
-    * iteration-truncation policy ([[graft.operators.Checkpointing]]).
+    * clusterPairs consumers already apply. The bucket modulus and
+    * both schemas persist in `path/_meta` ([[writeMeta]]), so an
+    * empty pair set reads back as an empty frame. `checkpointDir`
+    * passes through to the closure's iteration-truncation policy
+    * ([[graft.operators.Checkpointing]]).
     */
   def writeDupGraph(
       pairs: DataFrame,
@@ -503,130 +883,55 @@ object Io {
     require(buckets > 0, "buckets must be positive")
     val spark = pairs.sparkSession
     import spark.implicits._
-    // base rows carry upsert-stamp 0, the writeIvfIndex rule: one
-    // schema shared with later upsertDupGraph appends
-    val stampedPairs = pairs
-      .withColumn("pair_bucket", pmod(xxhash64(col("id_a")), lit(buckets.toLong)))
-      .withColumn("__seq", lit(0L))
-    stampedPairs
-      // cluster by the partition column before the partitioned write
-      // (guide-standard REBALANCE-before-write): each bucket lands in
-      // ONE task → one file per bucket per generation, instead of a
-      // file per (task × bucket) — the write used to emit ~4 small
-      // files per bucket and every read/copy paid the listing. At
-      // production scale the bucket modulus is the file-sizing knob.
-      .repartition(col("pair_bucket"))
-      .write
-      .mode("overwrite")
-      .partitionBy("pair_bucket")
-      .parquet(s"$path/pairs")
-    // EXPLICIT-schema read-backs throughout this family: an EMPTY
-    // pair set (a quiet day's increment base, a history window with
-    // no dups) writes a fileless parquet dir, and schema inference on
-    // it throws — with the schema persisted in _meta and supplied on
-    // every read, an empty artifact is just an empty frame.
-    val stampedLabels = graft.operators.Dedup
+    val pairsSchema = writeStamped(
+      pairs.withColumn("pair_bucket", bucketOf("id_a", buckets)),
+      s"$path/pairs", Some("pair_bucket"))
+    val labels = graft.operators.Dedup
       .clusterPairs(
-        spark.read.schema(stampedPairs.schema).parquet(s"$path/pairs")
-          .select(col("id_a"), col("id_b")),
+        spark.read.schema(pairsSchema).parquet(s"$path/pairs").select(col("id_a"), col("id_b")),
         checkpointDir = checkpointDir)
-      .withColumn("id_bucket", pmod(xxhash64(col("id")), lit(buckets.toLong)))
-    stampedLabels
-      .repartition(col("id_bucket"))
-      .write
-      .mode("overwrite")
-      .partitionBy("id_bucket")
-      .parquet(s"$path/labels")
-    Seq((buckets, stampedPairs.schema.json, stampedLabels.schema.json))
-      .toDF("buckets", "pairs_schema", "labels_schema")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/_meta")
+      .withColumn("id_bucket", bucketOf("id", buckets))
+    writeDir(labels, s"$path/labels", Some("id_bucket"), "overwrite")
+    writeMeta(
+      Seq((buckets, pairsSchema.json, labels.schema.json))
+        .toDF("buckets", "pairs_schema", "labels_schema"),
+      path)
   }
 
-  private def dupGraphMeta(spark: SparkSession, path: String): (Int, StructType, StructType) = {
-    val r = spark.read.parquet(s"$path/_meta")
-      .select(col("buckets"), col("pairs_schema"), col("labels_schema"))
-      .head()
-    (
-      r.getInt(0),
-      org.apache.spark.sql.types.DataType.fromJson(r.getString(1)).asInstanceOf[StructType],
-      org.apache.spark.sql.types.DataType.fromJson(r.getString(2)).asInstanceOf[StructType])
+  private def dupGraphPairsAt(spark: SparkSession, path: String, asOf: Option[Long]): DataFrame = {
+    val (_, Seq(pairsSchema)) = readMeta(spark, path, "pairs_schema")
+    hideTombstoned(
+      readStamped(spark, s"$path/pairs", Some(pairsSchema), asOf), Seq("id_a", "id_b"), path, asOf)
+      .drop("pair_bucket", "__seq")
   }
 
   /** Load a [[writeDupGraph]] edge list: (id_a, id_b) plus whatever
     * verification columns the build carried (jaccard score etc.).
-    * A neighbor lookup for doc d prunes on
-    * `pair_bucket = hash(d) mod bucketCount` — see [[dupGraphBuckets]].
+    * Doc tombstones ([[deleteDupGraphDocs]]) hide every pair touching
+    * a deleted doc at or below the tombstone stamp — pairs re-appended
+    * at a higher stamp (the doc came back) stay live. A neighbor
+    * lookup for doc d prunes on `pair_bucket = hash(d) mod
+    * bucketCount` — see [[dupGraphBucketCount]].
     */
-  def readDupGraphPairs(spark: SparkSession, path: String): DataFrame = {
-    val (_, pairsSchema, _) = dupGraphMeta(spark, path)
-    val raw = spark.read.schema(pairsSchema).parquet(s"$path/pairs")
-    // doc tombstones ([[deleteDupGraphDocs]]) hide every pair that
-    // touches a deleted doc at or below the tombstone stamp — pairs
-    // re-appended at a higher stamp (the doc came back) stay live
-    val live = tombstonesOf(spark, path) match {
-      case None => raw
-      case Some(t) =>
-        val tmax = t.groupBy(col("id").as("__tid")).agg(max(col("seq")).as("__tseq"))
-        raw
-          .join(
-            tmax,
-            col("id_a") === col("__tid") &&
-              coalesce(col("__seq"), lit(0L)) <= col("__tseq"),
-            "left_anti")
-          .join(
-            tmax,
-            col("id_b") === col("__tid") &&
-              coalesce(col("__seq"), lit(0L)) <= col("__tseq"),
-            "left_anti")
-    }
-    live.drop("pair_bucket", "__seq")
-  }
+  def readDupGraphPairs(spark: SparkSession, path: String): DataFrame =
+    dupGraphPairsAt(spark, path, None)
 
-  /** Time-travel read of the dup-graph pair set AS OF `asOfSeq` — the
-    * [[readIvfIndexAsOf]] discipline applied to the second artifact
-    * family: every appended pair carries its stamp (base build = 0)
-    * and tombstones carry theirs, so the graph exactly as it stood at
-    * stamp `asOfSeq` is a FILTER (appends with __seq ≤ asOfSeq,
-    * tombstones restricted to seq ≤ asOfSeq), not a restore from
-    * backup. As-of the max stamp == the live [[readDupGraphPairs]]
-    * view; as-of 0 == the base build; an as-of read BELOW a delete's
-    * stamp sees the pre-takedown graph — the audit/debug view
-    * ("which cluster did this doc sit in before Tuesday's takedown")
-    * that no current-view read can produce. NOTE: compaction
-    * ([[compactDupGraph]]) rewrites history into one generation and
-    * deliberately forfeits pre-compaction as-of states — time travel
-    * and compaction trade off, same as the IVF family.
+  /** Time-travel read of the dup-graph pair set AS OF `asOfSeq`:
+    * every appended pair carries its stamp (base build = 0) and
+    * tombstones carry theirs, so the graph exactly as it stood at
+    * stamp `asOfSeq` is a FILTER, not a restore from backup. As-of
+    * the max stamp == the live [[readDupGraphPairs]] view; as-of 0 ==
+    * the base build; an as-of read BELOW a delete's stamp sees the
+    * pre-takedown graph — the audit/debug view ("which cluster did
+    * this doc sit in before Tuesday's takedown") that no current-view
+    * read can produce. Compaction ([[compactDupGraph]]) forfeits
+    * pre-compaction as-of states, as in every family.
     */
   def readDupGraphPairsAsOf(
       spark: SparkSession,
       path: String,
-      asOfSeq: Long): DataFrame = {
-    require(asOfSeq >= 0L, "asOfSeq must be >= 0")
-    val (_, pairsSchema, _) = dupGraphMeta(spark, path)
-    val raw = spark.read.schema(pairsSchema).parquet(s"$path/pairs")
-      .filter(coalesce(col("__seq"), lit(0L)) <= asOfSeq)
-    val live = tombstonesOf(spark, path) match {
-      case None => raw
-      case Some(t) =>
-        val tmax = t
-          .filter(col("seq") <= asOfSeq)
-          .groupBy(col("id").as("__tid"))
-          .agg(max(col("seq")).as("__tseq"))
-        raw
-          .join(
-            tmax,
-            col("id_a") === col("__tid") &&
-              coalesce(col("__seq"), lit(0L)) <= col("__tseq"),
-            "left_anti")
-          .join(
-            tmax,
-            col("id_b") === col("__tid") &&
-              coalesce(col("__seq"), lit(0L)) <= col("__tseq"),
-            "left_anti")
-    }
-    live.drop("pair_bucket", "__seq")
-  }
+      asOfSeq: Long): DataFrame =
+    dupGraphPairsAt(spark, path, Some(asOfSeq))
 
   /** Tombstone-delete DOCS from the dup graph (the takedown shape for
     * the pair artifact): every pair touching the ids is hidden from
@@ -656,41 +961,43 @@ object Io {
       seq: Long,
       checkpointDir: Option[String] = None,
       recompute: Boolean = true): Unit = {
-    require(seq > 0L, "delete seq must be positive (0 is the base build's stamp)")
     writeTombstones(ids, path, seq)
     if (recompute) recomputeDupGraphLabels(ids.sparkSession, path, checkpointDir)
   }
 
+  /** Stage `labels` to `labels_next` and swap it in by rename instead
+    * of read-back + rewrite (half the label I/O per refresh, same
+    * crash contract: the staged dir survives until the live one is
+    * replaced, so an interrupted swap is re-runnable from the stage).
+    */
+  private def swapLabels(labels: DataFrame, path: String, buckets: Int): Unit = {
+    writeDir(
+      labels.withColumn("id_bucket", bucketOf("id", buckets)),
+      s"$path/labels_next", Some("id_bucket"), "overwrite")
+    swapDir(labels.sparkSession, s"$path/labels_next", s"$path/labels")
+  }
+
   /** Re-close the dup graph's label table from its live pair set —
     * the maintenance step after [[deleteDupGraphDocs]] (invoked there
-    * automatically) or any out-of-band pair surgery. Staged swap like
-    * the upsert path.
+    * automatically) or any out-of-band pair surgery.
     */
   def recomputeDupGraphLabels(
       spark: SparkSession,
       path: String,
       checkpointDir: Option[String] = None): Unit = {
-    val (buckets, _, _) = dupGraphMeta(spark, path)
-    graft.operators.Dedup
-      .clusterPairs(
+    val (buckets, _) = readMeta(spark, path)
+    swapLabels(
+      graft.operators.Dedup.clusterPairs(
         readDupGraphPairs(spark, path).select(col("id_a"), col("id_b")),
-        checkpointDir = checkpointDir)
-      .withColumn("id_bucket", pmod(xxhash64(col("id")), lit(buckets.toLong)))
-      .repartition(col("id_bucket"))
-      .write.mode("overwrite").partitionBy("id_bucket").parquet(s"$path/labels_next")
-    // directory swap instead of read-back + rewrite: the staged table
-    // used to be re-shuffled and re-written into the live dir (2× the
-    // label I/O per refresh); a rename carries the same crash
-    // contract (staged dir intact until the live one is replaced, so
-    // an interrupted swap is re-runnable from the stage)
-    swapDir(spark, s"$path/labels_next", s"$path/labels")
+        checkpointDir = checkpointDir),
+      path, buckets)
   }
 
   /** Load [[writeDupGraph]] cluster labels: (id, cluster_id), pair-
     * member ids only — restore singletons with coalesce(label, id).
     */
   def readDupGraphLabels(spark: SparkSession, path: String): DataFrame = {
-    val (_, _, labelsSchema) = dupGraphMeta(spark, path)
+    val (_, Seq(labelsSchema)) = readMeta(spark, path, "labels_schema")
     spark.read.schema(labelsSchema).parquet(s"$path/labels").drop("id_bucket")
   }
 
@@ -698,35 +1005,23 @@ object Io {
     * building pruning predicates on `pair_bucket`/`id_bucket`.
     */
   def dupGraphBucketCount(spark: SparkSession, path: String): Int =
-    spark.read.parquet(s"$path/_meta").select(col("buckets")).head().getInt(0)
+    readMeta(spark, path)._1
 
-  /** Compact a dup-graph artifact's pair set: distinct pairs rewritten
-    * as a fresh stamp-0 base. Streaming maintenance can append the
-    * same pair under two stamps (a pair whose endpoints arrive in
-    * different micro-batches is discovered by both); the duplicates
-    * are harmless to the closure and to every label consumer, but
-    * they inflate the pair scan — this clears them, plus the file
-    * accumulation of a long append history. Labels are already a
-    * resolved table and are untouched.
+  /** Compact a dup-graph artifact's pair set: distinct live pairs
+    * rewritten as a fresh stamp-0 base. Streaming maintenance can
+    * append the same pair under two stamps (a pair whose endpoints
+    * arrive in different micro-batches is discovered by both); the
+    * duplicates are harmless to the closure and to every label
+    * consumer, but they inflate the pair scan — this clears them,
+    * plus the file accumulation of a long append history. Labels are
+    * already a resolved table and are untouched.
     */
   def compactDupGraph(spark: SparkSession, path: String): Unit = {
-    val (buckets, _, _) = dupGraphMeta(spark, path)
-    val stage = s"$path/pairs_compacting"
-    readDupGraphPairs(spark, path)
-      .distinct()
-      .withColumn("pair_bucket", pmod(xxhash64(col("id_a")), lit(buckets.toLong)))
-      .withColumn("__seq", lit(0L))
-      .repartition(col("pair_bucket"))
-      .write.mode("overwrite").partitionBy("pair_bucket").parquet(stage)
-    // swap, don't rewrite: the compacted generation was read back and
-    // re-written into the live dir — 2× the surviving-pair I/O per
-    // compaction for the same crash contract (stage survives until
-    // the live dir is replaced)
-    swapDir(spark, stage, s"$path/pairs")
-    // the compacted base holds only LIVE pairs at stamp 0 — keeping
-    // the tombstones would wrongly re-hide docs whose pairs were
-    // re-appended before compaction
-    deleteDir(spark, s"$path/_tombstones")
+    val (buckets, _) = readMeta(spark, path)
+    compactDir(
+      readDupGraphPairs(spark, path).distinct()
+        .withColumn("pair_bucket", bucketOf("id_a", buckets)),
+      s"$path/pairs", Some("pair_bucket"), Some(path))
   }
 
   /** Incremental dup-graph maintenance — the IVF/PQ/postings upsert
@@ -762,14 +1057,11 @@ object Io {
       seq: Long,
       checkpointDir: Option[String] = None,
       recomputeLabels: Boolean = true): Unit = {
-    require(seq > 0L, "upsert seq must be positive (0 is the base build's stamp)")
     val spark = newPairs.sparkSession
-    val (buckets, pairsSchema, _) = dupGraphMeta(spark, path)
-    newPairs
-      .withColumn("pair_bucket", pmod(xxhash64(col("id_a")), lit(buckets.toLong)))
-      .withColumn("__seq", lit(seq))
-      .repartition(col("pair_bucket"))
-      .write.mode("append").partitionBy("pair_bucket").parquet(s"$path/pairs")
+    val (buckets, Seq(pairsSchema)) = readMeta(spark, path, "pairs_schema")
+    writeStamped(
+      newPairs.withColumn("pair_bucket", bucketOf("id_a", buckets)),
+      s"$path/pairs", Some("pair_bucket"), Some(seq))
     // `recomputeLabels = false` is the bulk-maintenance posture the
     // delete path already offers: appends are the durable truth (pair
     // reads and as-of reads are correct immediately); skip the
@@ -784,27 +1076,21 @@ object Io {
     val merged = graft.operators.Dedup.clusterPairs(
       // read the increment back from the artifact (pair lineage runs
       // once, into the append) and fold in the star edges
-      spark.read.schema(pairsSchema).parquet(s"$path/pairs")
-        .filter(coalesce(col("__seq"), lit(0L)) === seq)
+      readStamped(spark, s"$path/pairs", Some(pairsSchema))
+        .filter(col("__seq") === seq)
         .select(col("id_a"), col("id_b"))
         .unionByName(stars),
       checkpointDir = checkpointDir)
     // docs untouched by the increment keep their labels; docs in the
     // merged closure take the new (possibly lower) canonical id
-    val rewritten = oldLabels
-      .join(merged.withColumnRenamed("cluster_id", "__new"), Seq("id"), "full")
-      .select(
-        col("id"),
-        coalesce(col("__new"), col("cluster_id")).as("cluster_id"))
-    rewritten
-      .withColumn("id_bucket", pmod(xxhash64(col("id")), lit(buckets.toLong)))
-      .repartition(col("id_bucket"))
-      .write.mode("overwrite").partitionBy("id_bucket").parquet(s"$path/labels_next")
-    // swap via rename (same crash contract as the old read-back +
-    // rewrite — the staged dir survives until the live one is
-    // replaced — at half the label I/O)
-    swapDir(spark, s"$path/labels_next", s"$path/labels")
+    swapLabels(
+      oldLabels
+        .join(merged.withColumnRenamed("cluster_id", "__new"), Seq("id"), "full")
+        .select(col("id"), coalesce(col("__new"), col("cluster_id")).as("cluster_id")),
+      path, buckets)
   }
+
+  // ---- perceptual-hash codes (row-versioned: root dir, by `pfx`) -----
 
   /** Persist a perceptual-hash code table
     * ([[graft.operators.Multimodal.phashCodes]] output) partitioned
@@ -816,11 +1102,7 @@ object Io {
     * its prefix directory.
     */
   def writePhashIndex(codes: DataFrame, path: String): Unit =
-    codes
-      .withColumn("__seq", lit(0L))
-      // file-per-prefix write (the dup-graph rule)
-      .repartition(col("pfx"))
-      .write.mode("overwrite").partitionBy("pfx").parquet(path)
+    writeStamped(codes, path, Some("pfx"))
 
   def readPhashIndex(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path).drop("__seq")
@@ -835,71 +1117,43 @@ object Io {
     * upserted index; after [[compactPhashIndex]] the stale row is
     * physically gone and bucket pruning is safe again.
     */
-  def upsertPhashIndex(codes: DataFrame, path: String, seq: Long): Unit = {
-    require(seq > 0L, "upsert seq must be positive (0 is the base build's stamp)")
-    codes
-      .withColumn("__seq", lit(seq))
-      .repartition(col("pfx"))
-      .write.mode("append").partitionBy("pfx").parquet(path)
-  }
+  def upsertPhashIndex(codes: DataFrame, path: String, seq: Long): Unit =
+    writeStamped(codes, path, Some("pfx"), Some(seq))
 
   /** Tombstone-delete media ids from a persisted phash index — the
     * [[deleteIvfIds]] shape for the code table (media takedown
     * without touching code files).
     */
-  def deletePhashIds(ids: DataFrame, path: String, seq: Long): Unit = {
-    require(seq > 0L, "delete seq must be positive (0 is the base build's stamp)")
+  def deletePhashIds(ids: DataFrame, path: String, seq: Long): Unit =
     writeTombstones(ids, path, seq)
-  }
 
   /** Load a phash index with upserts + tombstones applied: the LATEST
-    * version of every media id (max `__seq`, distinct positive stamps
-    * per upsert), minus tombstoned ids. One id-window shuffle — the
-    * read-side cost of the append-only write path.
+    * live version of every media id ([[readLastWins]]).
     */
-  def readPhashIndexLatest(spark: SparkSession, path: String): DataFrame = {
-    val all = spark.read.parquet(path)
-      .withColumn("__seq", coalesce(col("__seq"), lit(0L)))
-    val latest = graft.operators.Relational
-      .dedupeFirstWins(all, Seq(col("id")), Seq(col("__seq").desc))
-    applyTombstones(latest, "id", path)
-  }
+  def readPhashIndexLatest(spark: SparkSession, path: String): DataFrame =
+    readLastWins(spark, path, path, "id")
 
   /** Time-travel read of a phash index AS OF `asOfSeq`: code rows
-    * and tombstones restricted to stamps ≤ the clock, then the same
+    * and tombstones restricted to stamps <= the clock, then the same
     * last-wins resolution as [[readPhashIndexLatest]] — an as-of
     * below a takedown's stamp serves the pre-takedown code table.
     */
   def readPhashIndexAsOf(
       spark: SparkSession,
       path: String,
-      asOfSeq: Long): DataFrame = {
-    require(asOfSeq >= 0L, "asOfSeq must be >= 0")
-    val all = spark.read.parquet(path)
-      .withColumn("__seq", coalesce(col("__seq"), lit(0L)))
-      .filter(col("__seq") <= asOfSeq)
-    val latest = graft.operators.Relational
-      .dedupeFirstWins(all, Seq(col("id")), Seq(col("__seq").desc))
-    applyTombstones(latest, "id", path, Some(asOfSeq))
-  }
+      asOfSeq: Long): DataFrame =
+    readLastWins(spark, path, path, "id", asOf = Some(asOfSeq))
 
   /** Compact a persisted phash index: resolve last-wins + tombstones
-    * once, rewrite as a stamp-0 base (root overwrite also purges the
-    * tombstone sidecar). [[readPhashIndex]] afterwards serves exactly
-    * what [[readPhashIndexLatest]] served before.
+    * once, rewrite as a stamp-0 base. The swapped-in stage has no
+    * `_tombstones` child, so the purge rides along. [[readPhashIndex]]
+    * afterwards serves exactly what [[readPhashIndexLatest]] served
+    * before.
     */
-  def compactPhashIndex(spark: SparkSession, path: String): Unit = {
-    val stage = s"${path}__compacting"
-    readPhashIndexLatest(spark, path)
-      .withColumn("__seq", lit(0L))
-      .repartition(col("pfx"))
-      .write.mode("overwrite").partitionBy("pfx").parquet(stage)
-    // swap, don't rewrite (same crash contract, half the I/O); the
-    // fresh stage has no _tombstones child, so the purge rides along
-    swapDir(spark, stage, path)
-  }
+  def compactPhashIndex(spark: SparkSession, path: String): Unit =
+    compactDir(readPhashIndexLatest(spark, path), path, Some("pfx"))
 
-  // ---- minhash signature artifact (the 6th seq-versioned family) --
+  // ---- minhash signature artifact (row-versioned: `sigs`) ----------
   //
   // The incremental near-dup pipeline's history side: signatures are
   // ONE full-corpus shingle pass, and every daily batch afterwards
@@ -907,41 +1161,21 @@ object Io {
   // read the signature table, never the history TEXT). At 100 TB the
   // re-signing cost this artifact removes is the dominant term of
   // the daily near-dup run — the same fit-once/score-forever shape
-  // as the LM-stats artifact. Same lifecycle discipline as
-  // IVF/PQ/postings/phash/dup-graph: stamp-0 base, seq-stamped
-  // upserts resolved last-wins per id, tombstone deletes, as-of time
-  // travel, one-generation compaction (ArtifactContractSpec runs its
-  // four clauses over this family too).
+  // as the LM-stats artifact.
 
   /** Persist a MinHash signature table ([[graft.operators.Dedup
     * .minhashSign]] output: id, sig array, hs sorted hash set) as a
-    * stamp-0 base, partitioned by hash(id) mod `buckets` (bounded
-    * directory count; per-doc signature lookups prune to one
-    * bucket). Modulus + schema persist in `_meta` (the dup-graph
-    * rule: explicit-schema read-backs, empty artifacts read as empty
-    * frames).
+    * stamp-0 base, partitioned by hash(id) mod `buckets` (per-doc
+    * signature lookups prune to one bucket). Modulus + schema persist
+    * in `_meta`.
     */
   def writeMinhashSigs(sigs: DataFrame, path: String, buckets: Int = 64): Unit = {
     require(buckets > 0, "buckets must be positive")
     val spark = sigs.sparkSession
     import spark.implicits._
-    val stamped = sigs
-      .withColumn("id_bucket", pmod(xxhash64(col("id")), lit(buckets.toLong)))
-      .withColumn("__seq", lit(0L))
-    stamped
-      .repartition(col("id_bucket"))
-      .write.mode("overwrite").partitionBy("id_bucket").parquet(s"$path/sigs")
-    Seq((buckets, stamped.schema.json))
-      .toDF("buckets", "sigs_schema")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/_meta")
-  }
-
-  private def minhashSigsMeta(spark: SparkSession, path: String): (Int, StructType) = {
-    val r = spark.read.parquet(s"$path/_meta")
-      .select(col("buckets"), col("sigs_schema")).head()
-    (r.getInt(0),
-      org.apache.spark.sql.types.DataType.fromJson(r.getString(1)).asInstanceOf[StructType])
+    val schema = writeStamped(
+      sigs.withColumn("id_bucket", bucketOf("id", buckets)), s"$path/sigs", Some("id_bucket"))
+    writeMeta(Seq((buckets, schema.json)).toDF("buckets", "sigs_schema"), path)
   }
 
   /** Append re-signed docs with a caller seq stamp — the re-crawled
@@ -950,73 +1184,54 @@ object Io {
     * ids last-wins on the stamp.
     */
   def upsertMinhashSigs(sigs: DataFrame, path: String, seq: Long): Unit = {
-    require(seq > 0L, "upsert seq must be positive (0 is the base build's stamp)")
-    val (buckets, _) = minhashSigsMeta(sigs.sparkSession, path)
-    sigs
-      .withColumn("id_bucket", pmod(xxhash64(col("id")), lit(buckets.toLong)))
-      .withColumn("__seq", lit(seq))
-      .repartition(col("id_bucket"))
-      .write.mode("append").partitionBy("id_bucket").parquet(s"$path/sigs")
+    val (buckets, _) = readMeta(sigs.sparkSession, path)
+    writeStamped(
+      sigs.withColumn("id_bucket", bucketOf("id", buckets)),
+      s"$path/sigs", Some("id_bucket"), Some(seq))
   }
 
   /** Tombstone-delete doc ids from a signature artifact (takedown
     * without rewriting signature files; re-signing at a higher stamp
     * restores).
     */
-  def deleteMinhashIds(ids: DataFrame, path: String, seq: Long): Unit = {
-    require(seq > 0L, "delete seq must be positive (0 is the base build's stamp)")
+  def deleteMinhashIds(ids: DataFrame, path: String, seq: Long): Unit =
     writeTombstones(ids, path, seq)
-  }
 
   /** Plain read (stamps dropped) — for freshly-built or compacted
     * artifacts; use [[readMinhashSigsLatest]] under live upserts.
     */
   def readMinhashSigs(spark: SparkSession, path: String): DataFrame = {
-    val (_, schema) = minhashSigsMeta(spark, path)
+    val (_, Seq(schema)) = readMeta(spark, path, "sigs_schema")
     spark.read.schema(schema).parquet(s"$path/sigs").drop("__seq", "id_bucket")
+  }
+
+  private def minhashSigsAt(spark: SparkSession, path: String, asOf: Option[Long]): DataFrame = {
+    val (_, Seq(schema)) = readMeta(spark, path, "sigs_schema")
+    readLastWins(spark, path, s"$path/sigs", "id", Some(schema), asOf).drop("id_bucket")
   }
 
   /** Latest signature per id (max stamp, tombstones applied) — the
     * live history side of the daily near-dup run.
     */
-  def readMinhashSigsLatest(spark: SparkSession, path: String): DataFrame = {
-    val (_, schema) = minhashSigsMeta(spark, path)
-    val all = spark.read.schema(schema).parquet(s"$path/sigs")
-      .withColumn("__seq", coalesce(col("__seq"), lit(0L)))
-    val latest = graft.operators.Relational
-      .dedupeFirstWins(all, Seq(col("id")), Seq(col("__seq").desc))
-    applyTombstones(latest, "id", path).drop("id_bucket")
-  }
+  def readMinhashSigsLatest(spark: SparkSession, path: String): DataFrame =
+    minhashSigsAt(spark, path, None)
 
   /** Time-travel read AS OF `asOfSeq` — signature rows and tombstones
-    * restricted to stamps ≤ the clock, then last-wins: reproduce
+    * restricted to stamps <= the clock, then last-wins: reproduce
     * yesterday's dedup decisions against yesterday's history.
     */
-  def readMinhashSigsAsOf(spark: SparkSession, path: String, asOfSeq: Long): DataFrame = {
-    require(asOfSeq >= 0L, "asOfSeq must be >= 0")
-    val (_, schema) = minhashSigsMeta(spark, path)
-    val all = spark.read.schema(schema).parquet(s"$path/sigs")
-      .withColumn("__seq", coalesce(col("__seq"), lit(0L)))
-      .filter(col("__seq") <= asOfSeq)
-    val latest = graft.operators.Relational
-      .dedupeFirstWins(all, Seq(col("id")), Seq(col("__seq").desc))
-    applyTombstones(latest, "id", path, Some(asOfSeq)).drop("id_bucket")
-  }
+  def readMinhashSigsAsOf(spark: SparkSession, path: String, asOfSeq: Long): DataFrame =
+    minhashSigsAt(spark, path, Some(asOfSeq))
 
   /** Compact: resolve last-wins + tombstones once, rewrite as a
     * stamp-0 base, purge the tombstone sidecar — [[readMinhashSigs]]
     * afterwards serves what [[readMinhashSigsLatest]] served before.
     */
   def compactMinhashSigs(spark: SparkSession, path: String): Unit = {
-    val (buckets, schema) = minhashSigsMeta(spark, path)
-    val stage = s"$path/sigs_compacting"
-    readMinhashSigsLatest(spark, path)
-      .withColumn("id_bucket", pmod(xxhash64(col("id")), lit(buckets.toLong)))
-      .withColumn("__seq", lit(0L))
-      .repartition(col("id_bucket"))
-      .write.mode("overwrite").partitionBy("id_bucket").parquet(stage)
-    swapDir(spark, stage, s"$path/sigs")
-    deleteDir(spark, s"$path/_tombstones")
+    val (buckets, _) = readMeta(spark, path)
+    compactDir(
+      readMinhashSigsLatest(spark, path).withColumn("id_bucket", bucketOf("id", buckets)),
+      s"$path/sigs", Some("id_bucket"), Some(path))
   }
 
   /** Persist a learned BPE vocab-units table
@@ -1032,16 +1247,13 @@ object Io {
     val spark = units.sparkSession
     import spark.implicits._
     units.write.mode("overwrite").parquet(s"$path/units")
-    Seq(units.schema.json).toDF("units_schema")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_meta")
+    writeMeta(Seq(units.schema.json).toDF("units_schema"), path)
   }
 
   /** Load a [[writeBpeVocab]] artifact: (w, units). */
   def readBpeVocab(spark: SparkSession, path: String): DataFrame = {
-    val schema = org.apache.spark.sql.types.DataType
-      .fromJson(
-        spark.read.parquet(s"$path/_meta").select(col("units_schema")).head().getString(0))
-      .asInstanceOf[StructType]
+    val schema = schemaOf(
+      spark.read.parquet(s"$path/_meta").select(col("units_schema")).head().getString(0))
     spark.read.schema(schema).parquet(s"$path/units")
   }
 
@@ -1055,8 +1267,7 @@ object Io {
     * (a scorer's bigram join prunes to the probe terms' buckets),
     * `unigrams/` flat, `_meta` carrying bucket modulus + the two OOV
     * constants + both schemas (explicit-schema read-backs: an empty
-    * LM — one-doc corpus — must read as an empty frame, the
-    * writeDupGraph rule).
+    * LM — one-doc corpus — must read as an empty frame).
     */
   def writeLmModel(
       lm: (DataFrame, DataFrame, Long, Long),
@@ -1066,16 +1277,13 @@ object Io {
     val (biLp, uniLp, oov6, oovbo6) = lm
     val spark = biLp.sparkSession
     import spark.implicits._
-    val bi = biLp.withColumn(
-      "prev_bucket",
-      pmod(xxhash64(col("prev")), lit(buckets.toLong)))
-    bi.repartition(col("prev_bucket"))
-      .write.mode("overwrite").partitionBy("prev_bucket").parquet(s"$path/bigrams")
+    val bi = biLp.withColumn("prev_bucket", bucketOf("prev", buckets))
+    writeDir(bi, s"$path/bigrams", Some("prev_bucket"), "overwrite")
     uniLp.write.mode("overwrite").parquet(s"$path/unigrams")
-    Seq((buckets, oov6, oovbo6, bi.schema.json, uniLp.schema.json))
-      .toDF("buckets", "oov6", "oovbo6", "bi_schema", "uni_schema")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/_meta")
+    writeMeta(
+      Seq((buckets, oov6, oovbo6, bi.schema.json, uniLp.schema.json))
+        .toDF("buckets", "oov6", "oovbo6", "bi_schema", "uni_schema"),
+      path)
   }
 
   /** Load a [[writeLmModel]] artifact back into the exact
@@ -1089,17 +1297,15 @@ object Io {
       spark: SparkSession,
       path: String): (DataFrame, DataFrame, Long, Long) = {
     val m = spark.read.parquet(s"$path/_meta")
-      .select(col("buckets"), col("oov6"), col("oovbo6"), col("bi_schema"), col("uni_schema"))
+      .select(col("oov6"), col("oovbo6"), col("bi_schema"), col("uni_schema"))
       .head()
-    def schemaOf(j: String) =
-      org.apache.spark.sql.types.DataType.fromJson(j).asInstanceOf[StructType]
-    val bi = spark.read.schema(schemaOf(m.getString(3))).parquet(s"$path/bigrams")
+    val bi = spark.read.schema(schemaOf(m.getString(2))).parquet(s"$path/bigrams")
       .drop("prev_bucket")
-    val uni = spark.read.schema(schemaOf(m.getString(4))).parquet(s"$path/unigrams")
-    (bi, uni, m.getLong(1), m.getLong(2))
+    val uni = spark.read.schema(schemaOf(m.getString(3))).parquet(s"$path/unigrams")
+    (bi, uni, m.getLong(0), m.getLong(1))
   }
 
-  // --- LM COUNT-GRID artifact family (the 7th seq-versioned family) ---
+  // --- LM COUNT-GRID artifact family (linear counts: `uni`, `bi`) ---
   //
   // [[writeLmModel]] persists derived LOG-PROBS — correct for a frozen
   // release, but log-probs are not mergeable, so a live corpus would
@@ -1112,11 +1318,23 @@ object Io {
   // .fitBigramLmFromCounts]] derives a scorer bit-identical to a
   // from-scratch fit over the same live corpus.
 
+  private def writeLmGrids(
+      uni: DataFrame,
+      bi: DataFrame,
+      path: String,
+      buckets: Int,
+      upsertSeq: Option[Long]): (StructType, StructType) =
+    (writeStamped(
+      uni.withColumn("term_bucket", bucketOf("term", buckets)),
+      s"$path/uni", Some("term_bucket"), upsertSeq),
+      writeStamped(
+        bi.withColumn("prev_bucket", bucketOf("prev", buckets)),
+        s"$path/bi", Some("prev_bucket"), upsertSeq))
+
   /** Persist bigram-LM count grids at upsert-stamp 0. Layout:
     * `uni/` (term, cnt, __seq) bucketed by hash(term); `bi/`
     * (prev, term, cab, __seq) bucketed by hash(prev); `_meta` with
-    * the modulus + both schemas (explicit-schema read-backs — an
-    * empty grid reads as an empty frame, the writeDupGraph rule).
+    * the modulus + both schemas.
     */
   def writeLmCounts(
       uni: DataFrame,
@@ -1126,29 +1344,8 @@ object Io {
     require(buckets > 0, "buckets must be positive")
     val spark = uni.sparkSession
     import spark.implicits._
-    val u = uni
-      .withColumn("term_bucket", pmod(xxhash64(col("term")), lit(buckets.toLong)))
-      .withColumn("__seq", lit(0L))
-    u.repartition(col("term_bucket"))
-      .write.mode("overwrite").partitionBy("term_bucket").parquet(s"$path/uni")
-    val b = bi
-      .withColumn("prev_bucket", pmod(xxhash64(col("prev")), lit(buckets.toLong)))
-      .withColumn("__seq", lit(0L))
-    b.repartition(col("prev_bucket"))
-      .write.mode("overwrite").partitionBy("prev_bucket").parquet(s"$path/bi")
-    Seq((buckets, u.schema.json, b.schema.json))
-      .toDF("buckets", "uni_schema", "bi_schema")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/_meta")
-  }
-
-  private def lmCountsMeta(spark: SparkSession, path: String): (Int, StructType, StructType) = {
-    val m = spark.read.parquet(s"$path/_meta")
-      .select(col("buckets"), col("uni_schema"), col("bi_schema"))
-      .head()
-    def schemaOf(j: String) =
-      org.apache.spark.sql.types.DataType.fromJson(j).asInstanceOf[StructType]
-    (m.getInt(0), schemaOf(m.getString(1)), schemaOf(m.getString(2)))
+    val (u, b) = writeLmGrids(uni, bi, path, buckets, None)
+    writeMeta(Seq((buckets, u.json, b.json)).toDF("buckets", "uni_schema", "bi_schema"), path)
   }
 
   /** Append an increment's partial count grids with a seq stamp.
@@ -1161,41 +1358,24 @@ object Io {
       biDelta: DataFrame,
       path: String,
       seq: Long): Unit = {
-    val spark = uniDelta.sparkSession
-    val (buckets, _, _) = lmCountsMeta(spark, path)
-    uniDelta
-      .withColumn("term_bucket", pmod(xxhash64(col("term")), lit(buckets.toLong)))
-      .withColumn("__seq", lit(seq))
-      .repartition(col("term_bucket"))
-      .write.mode("append").partitionBy("term_bucket").parquet(s"$path/uni")
-    biDelta
-      .withColumn("prev_bucket", pmod(xxhash64(col("prev")), lit(buckets.toLong)))
-      .withColumn("__seq", lit(seq))
-      .repartition(col("prev_bucket"))
-      .write.mode("append").partitionBy("prev_bucket").parquet(s"$path/bi")
+    val (buckets, _) = readMeta(uniDelta.sparkSession, path)
+    writeLmGrids(uniDelta, biDelta, path, buckets, Some(seq))
   }
 
-  /** Merged count grids AS OF a stamp: SUM over all deltas with
-    * `__seq <= asOfSeq`, keys whose merged count reaches 0 DROP
-    * (a taken-down doc's types vanish from the vocab exactly as a
-    * re-fit would drop them). Returns (uni, bi) scorer-fit inputs.
+  /** Merged count grids AS OF a stamp ([[sumMerged]] over all deltas
+    * with `__seq <= asOfSeq`: a taken-down doc's types vanish from the
+    * vocab exactly as a re-fit would drop them). Returns (uni, bi)
+    * scorer-fit inputs.
     */
   def readLmCountsAsOf(
       spark: SparkSession,
       path: String,
       asOfSeq: Long): (DataFrame, DataFrame) = {
-    val (_, uniSchema, biSchema) = lmCountsMeta(spark, path)
-    val uni = spark.read.schema(uniSchema).parquet(s"$path/uni")
-      .filter(coalesce(col("__seq"), lit(0L)) <= asOfSeq)
-      .groupBy(col("term"))
-      .agg(sum(col("cnt")).as("cnt"))
-      .filter(col("cnt") > 0L)
-    val bi = spark.read.schema(biSchema).parquet(s"$path/bi")
-      .filter(coalesce(col("__seq"), lit(0L)) <= asOfSeq)
-      .groupBy(col("prev"), col("term"))
-      .agg(sum(col("cab")).as("cab"))
-      .filter(col("cab") > 0L)
-    (uni, bi)
+    val (_, Seq(uniSchema, biSchema)) = readMeta(spark, path, "uni_schema", "bi_schema")
+    (sumMerged(
+      readStamped(spark, s"$path/uni", Some(uniSchema), Some(asOfSeq)), Seq("term"), "cnt"),
+      sumMerged(
+        readStamped(spark, s"$path/bi", Some(biSchema), Some(asOfSeq)), Seq("prev", "term"), "cab"))
   }
 
   /** Latest merged grids (as-of the maximum stamp). */
@@ -1205,37 +1385,25 @@ object Io {
   /** Rewrite the delta history as ONE merged grid at stamp 0 — the
     * family's compaction: a month of micro-batch appends (and
     * takedown negations) collapses so readers stop re-merging
-    * history. Staged rewrite (never overwrite a path while lazily
-    * reading it), zero-count keys purged.
+    * history; zero-count keys purged.
     */
   def compactLmCounts(spark: SparkSession, path: String): Unit = {
-    val (buckets, uniSchema, biSchema) = lmCountsMeta(spark, path)
+    val (buckets, _) = readMeta(spark, path)
     val (uni, bi) = readLmCounts(spark, path)
-    val uStage = s"$path/uni_compacting"
-    uni
-      .withColumn("term_bucket", pmod(xxhash64(col("term")), lit(buckets.toLong)))
-      .withColumn("__seq", lit(0L))
-      .repartition(col("term_bucket"))
-      .write.mode("overwrite").partitionBy("term_bucket").parquet(uStage)
-    swapDir(spark, uStage, s"$path/uni")
-    val bStage = s"$path/bi_compacting"
-    bi
-      .withColumn("prev_bucket", pmod(xxhash64(col("prev")), lit(buckets.toLong)))
-      .withColumn("__seq", lit(0L))
-      .repartition(col("prev_bucket"))
-      .write.mode("overwrite").partitionBy("prev_bucket").parquet(bStage)
-    swapDir(spark, bStage, s"$path/bi")
+    compactDir(
+      uni.withColumn("term_bucket", bucketOf("term", buckets)), s"$path/uni", Some("term_bucket"))
+    compactDir(
+      bi.withColumn("prev_bucket", bucketOf("prev", buckets)), s"$path/bi", Some("prev_bucket"))
   }
 
-  /** Persisted (day, v, n) VALUE-GRID artifact — the EIGHTH
-    * seq-versioned family: the e-process monitors' shared sufficient
-    * statistic (the mean monitor, the variance monitor and the mean
-    * confidence sequence all fold the SAME grid) promoted from a
-    * session memo to a lifecycle artifact. Counts are LINEAR, so the
-    * lmCounts rules apply verbatim: an increment appends its partial
-    * grid under a seq stamp, a TAKEDOWN appends the removed rows'
-    * grid NEGATED (subtraction IS removal — no tombstone machinery),
-    * readers SUM-merge with zero-count keys dropping, and compaction
+  /** Persisted (day, v, n) VALUE-GRID artifact — a linear-counts
+    * family: the e-process monitors' shared sufficient statistic (the
+    * mean monitor, the variance monitor and the mean confidence
+    * sequence all fold the SAME grid) promoted from a session memo to
+    * a lifecycle artifact. Counts are LINEAR, so the lmCounts rules
+    * apply verbatim: an increment appends its partial grid under a
+    * seq stamp, a TAKEDOWN appends the removed rows' grid NEGATED,
+    * readers sum-merge with zero-count keys dropping, and compaction
     * rewrites one merged generation at stamp 0. The streaming
     * monitors' append posture IS this artifact's upsert path.
     *
@@ -1249,58 +1417,36 @@ object Io {
     require(buckets > 0, "buckets must be positive")
     val spark = cells.sparkSession
     import spark.implicits._
-    val g = valueGridGuard(cells.select(col("day"), col("v"), col("n")))
-      .withColumn("day_bucket", pmod(xxhash64(col("day")), lit(buckets.toLong)))
-      .withColumn("__seq", lit(0L))
-    g.repartition(col("day_bucket"))
-      .write.mode("overwrite").partitionBy("day_bucket").parquet(s"$path/grid")
-    Seq((buckets, g.schema.json))
-      .toDF("buckets", "grid_schema")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/_meta")
+    val schema = writeStamped(
+      valueGridGuard(cells).withColumn("day_bucket", bucketOf("day", buckets)),
+      s"$path/grid", Some("day_bucket"))
+    writeMeta(Seq((buckets, schema.json)).toDF("buckets", "grid_schema"), path)
   }
 
   private def valueGridGuard(df: DataFrame): DataFrame =
-    df.filter(
+    df.select(col("day"), col("v"), col("n")).filter(
       assert_true(
         col("v") >= 0L && col("v") <= 1000000L,
         lit("valueGrid: v outside [0, 1e6] — the declared value bound " +
           "is violated")).isNull)
 
-  private def valueGridMeta(spark: SparkSession, path: String): (Int, StructType) = {
-    val m = spark.read.parquet(s"$path/_meta")
-      .select(col("buckets"), col("grid_schema"))
-      .head()
-    (m.getInt(0),
-      org.apache.spark.sql.types.DataType.fromJson(m.getString(1)).asInstanceOf[StructType])
-  }
-
   /** Append an increment's partial (day, v, n) grid with a seq stamp;
     * negate `n` for a takedown (counts are linear).
     */
   def upsertValueGrid(delta: DataFrame, path: String, seq: Long): Unit = {
-    require(seq > 0L, "upsert seq must be positive (0 is the base build's stamp)")
-    val (buckets, _) = valueGridMeta(delta.sparkSession, path)
-    valueGridGuard(delta.select(col("day"), col("v"), col("n")))
-      .withColumn("day_bucket", pmod(xxhash64(col("day")), lit(buckets.toLong)))
-      .withColumn("__seq", lit(seq))
-      .repartition(col("day_bucket"))
-      .write.mode("append").partitionBy("day_bucket").parquet(s"$path/grid")
+    val (buckets, _) = readMeta(delta.sparkSession, path)
+    writeStamped(
+      valueGridGuard(delta).withColumn("day_bucket", bucketOf("day", buckets)),
+      s"$path/grid", Some("day_bucket"), Some(seq))
   }
 
-  /** Merged grid AS OF a stamp: SUM over all deltas with
-    * `__seq <= asOfSeq`, keys whose merged count reaches 0 DROP (a
-    * taken-down day×value cell vanishes exactly as a rebuild on the
-    * filtered events would produce). Returns the (day, v, n)
-    * monitor-fit grid.
+  /** Merged grid AS OF a stamp ([[sumMerged]]: a taken-down day×value
+    * cell vanishes exactly as a rebuild on the filtered events would
+    * produce). Returns the (day, v, n) monitor-fit grid.
     */
   def readValueGridAsOf(spark: SparkSession, path: String, asOfSeq: Long): DataFrame = {
-    val (_, schema) = valueGridMeta(spark, path)
-    spark.read.schema(schema).parquet(s"$path/grid")
-      .filter(coalesce(col("__seq"), lit(0L)) <= asOfSeq)
-      .groupBy(col("day"), col("v"))
-      .agg(sum(col("n")).as("n"))
-      .filter(col("n") > 0L)
+    val (_, Seq(schema)) = readMeta(spark, path, "grid_schema")
+    sumMerged(readStamped(spark, s"$path/grid", Some(schema), Some(asOfSeq)), Seq("day", "v"), "n")
   }
 
   /** Latest merged grid (as-of the maximum stamp). */
@@ -1308,18 +1454,14 @@ object Io {
     readValueGridAsOf(spark, path, Long.MaxValue)
 
   /** Rewrite the delta history as ONE merged grid at stamp 0 —
-    * the family's compaction (staged rewrite, zero-count keys
-    * purged, history forfeited).
+    * the family's compaction (zero-count keys purged, history
+    * forfeited).
     */
   def compactValueGrid(spark: SparkSession, path: String): Unit = {
-    val (buckets, schema) = valueGridMeta(spark, path)
-    val stage = s"$path/grid_compacting"
-    readValueGrid(spark, path)
-      .withColumn("day_bucket", pmod(xxhash64(col("day")), lit(buckets.toLong)))
-      .withColumn("__seq", lit(0L))
-      .repartition(col("day_bucket"))
-      .write.mode("overwrite").partitionBy("day_bucket").parquet(stage)
-    swapDir(spark, stage, s"$path/grid")
+    val (buckets, _) = readMeta(spark, path)
+    compactDir(
+      readValueGrid(spark, path).withColumn("day_bucket", bucketOf("day", buckets)),
+      s"$path/grid", Some("day_bucket"))
   }
 
   /** Rewrite a parquet directory into ~`targetBytes`-sized files —
@@ -1352,7 +1494,7 @@ object Io {
     val before = dataFiles()
     val total = before.map(_.getLen).sum
     val n = math.max(1L, (total + targetBytes - 1) / targetBytes).toInt
-    val stage = s"${path}__compacting"
+    val stage = stagingOf(path)
     spark.read.parquet(path).repartition(n).write.mode("overwrite").parquet(stage)
     // repartition again on the live rewrite: the stage read-back may
     // pack several small files per split (files.maxPartitionBytes),
@@ -1361,354 +1503,4 @@ object Io {
     deleteDir(spark, stage)
     (before.size, dataFiles().size)
   }
-
-  // ---- tombstone deletes (takedown / right-to-be-forgotten) -------
-  //
-  // A training-data engine must be able to REMOVE documents from its
-  // persisted artifacts — takedown requests, licensing reversals,
-  // contamination discoveries — without rewriting a 100 TB index. The
-  // discipline is the upsert one inverted: deletes land as seq-stamped
-  // tombstone rows in an underscore sidecar (invisible to the data
-  // scan, append-only, no existing file rewritten), and the last-wins
-  // readers treat a tombstone at stamp s as deleting every version
-  // with stamp <= s — so delete-then-reupsert restores the doc, and
-  // upsert-then-delete removes it, purely by seq order. Callers use
-  // stamps distinct from every upsert stamp. Physical purging
-  // (rewriting the data files to actually drop the bytes) is a
-  // compaction concern layered on top; the tombstone makes the doc
-  // UNSERVABLE immediately, which is what the request requires.
-
-  private def writeTombstones(ids: DataFrame, path: String, seq: Long): Unit =
-    ids
-      .select(col(ids.columns.head).as("id"))
-      .distinct()
-      .withColumn("seq", lit(seq))
-      .write.mode("append").parquet(s"$path/_tombstones")
-
-  private def tombstonesOf(spark: SparkSession, path: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_tombstones")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) Some(spark.read.parquet(s"$path/_tombstones")) else None
-  }
-
-  /** Drop the rows of `latest` (which still carries `__seq`) whose id
-    * has a tombstone at or above the row's stamp, then drop `__seq`.
-    * `maxSeq` restricts which tombstones are VISIBLE (the as-of
-    * read's clock) — None means all of them, the live view.
-    */
-  private def applyTombstones(
-      latest: DataFrame,
-      idCol: String,
-      path: String,
-      maxSeq: Option[Long] = None): DataFrame = {
-    val spark = latest.sparkSession
-    tombstonesOf(spark, path) match {
-      case None => latest.drop("__seq")
-      case Some(t0) =>
-        val t = maxSeq.fold(t0)(m => t0.filter(col("seq") <= m))
-        val tmax = t.groupBy(col("id").as("__tid")).agg(max(col("seq")).as("__tseq"))
-        latest
-          .join(
-            tmax,
-            col(idCol) === col("__tid") && col("__seq") <= col("__tseq"),
-            "left_anti")
-          .drop("__seq")
-    }
-  }
-
-  /** Tombstone-delete vectors from a persisted IVF index: `ids` (one
-    * column, the vector ids) become unservable to
-    * [[readIvfIndexLatest]] from this stamp on — no cell file is
-    * rewritten. Re-upserting an id at a HIGHER stamp restores it.
-    */
-  def deleteIvfIds(ids: DataFrame, path: String, seq: Long): Unit = {
-    require(seq > 0L, "delete seq must be positive (0 is the base build's stamp)")
-    writeTombstones(ids, path, seq)
-  }
-
-  /** Tombstone-delete coded vectors from a persisted PQ index — the
-    * [[deleteIvfIds]] mirror for the byte-coded layout.
-    */
-  def deletePqIds(ids: DataFrame, path: String, seq: Long): Unit = {
-    require(seq > 0L, "delete seq must be positive (0 is the base build's stamp)")
-    writeTombstones(ids, path, seq)
-  }
-
-  // ---- compaction --------------------------------------------------
-  //
-  // The physical-purge half of the tombstone story, and the standard
-  // cure for append-only accumulation: resolve last-wins + tombstones
-  // ONCE, rewrite the result as a fresh base (stamp 0), drop the
-  // sidecars. After compaction the plain readers serve the artifact
-  // with no per-read resolution cost, deleted bytes are actually gone
-  // from disk (the takedown's retention requirement), and the file
-  // count resets — the small-files problem of a long upsert history
-  // clears in one pass. Each compact stages the resolved rows to a
-  // scratch child first (never overwrite a path while lazily reading
-  // it), then rewrites the live layout and deletes the staging +
-  // tombstone dirs through the Hadoop FS API.
-
-  private def deleteDir(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) { fs.delete(p, true); () }
-  }
-
-  /** Replace `dst` with the fully-written staged dir `src` by rename —
-    * the staged-swap step for artifact maintenance without the old
-    * read-back + rewrite (which paid the table's I/O twice per swap).
-    * Crash contract is unchanged: `src` is complete before `dst` is
-    * touched, so an interrupted swap re-runs from the stage. On object
-    * stores without atomic rename the FS client copies server-side —
-    * still cheaper than pulling the table through Spark again.
-    */
-  private def swapDir(spark: SparkSession, src: String, dst: String): Unit = {
-    val s = new org.apache.hadoop.fs.Path(src)
-    val d = new org.apache.hadoop.fs.Path(dst)
-    val fs = s.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(d)) fs.delete(d, true)
-    if (!fs.rename(s, d))
-      throw new java.io.IOException(s"swapDir: rename $src -> $dst failed")
-  }
-
-  /** Compact a persisted IVF index: materialize the effective corpus
-    * (upserts last-wins, tombstones applied) as the new stamp-0 base,
-    * purge the tombstone sidecar. [[readIvfIndex]] afterwards serves
-    * exactly what [[readIvfIndexLatest]] served before.
-    */
-  def compactIvfIndex(spark: SparkSession, path: String, idCol: String): Unit = {
-    val (_, latest) = readIvfIndexLatest(spark, path, idCol)
-    latest
-      .withColumn("__seq", lit(0L))
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells_compacting")
-    swapDir(spark, s"$path/cells_compacting", s"$path/cells")
-    deleteDir(spark, s"$path/_tombstones")
-  }
-
-  /** Compact a persisted PQ index — [[compactIvfIndex]]'s mirror for
-    * the byte-coded layout.
-    */
-  def compactPqIndex(spark: SparkSession, path: String, idCol: String): Unit = {
-    val (_, latest) = readPqIndexLatest(spark, path, idCol)
-    latest
-      .withColumn("__seq", lit(0L))
-      .write.mode("overwrite").parquet(s"$path/codes_compacting")
-    swapDir(spark, s"$path/codes_compacting", s"$path/codes")
-    deleteDir(spark, s"$path/_tombstones")
-  }
-
-  def readIvfIndex(spark: SparkSession, path: String): (Seq[Array[Double]], DataFrame) = {
-    val cents = spark.read.parquet(s"$path/centroids")
-      .orderBy(col("cell"))
-      .collect()
-      .map(_.getAs[scala.collection.Seq[Double]]("centroid").toArray)
-      .toSeq
-    (cents, spark.read.parquet(s"$path/cells").drop("__seq"))
-  }
-
-  /** Incremental IVF upsert — the reference's index maintenance shape
-    * (Pinecone upserts vectors into an EXISTING index; the fit is
-    * never repeated): `assigned` (new/changed vectors already
-    * cell-assigned against the index's frozen centroids via
-    * [[graft.operators.Similarity.ivfAssign]]) lands as an APPEND to
-    * the cell-partitioned layout, stamped with `seq` — a caller
-    * batch number that must increase per upsert. No rewrite of
-    * existing files, no shuffle of the existing index: the append
-    * touches only the incoming rows' cell directories.
-    * [[readIvfIndexLatest]] resolves replaced ids last-wins on the
-    * stamp. (Re-fitting centroids is a REBUILD, not an upsert —
-    * assignment against frozen centroids is what keeps the increment
-    * cheap, at the cost of drift the operator's caller monitors.)
-    */
-  def upsertIvfIndex(assigned: DataFrame, path: String, seq: Long): Unit = {
-    require(seq > 0L, "upsert seq must be positive (0 is the base build's stamp)")
-    assigned
-      .withColumn("__seq", lit(seq))
-      .repartition(col("cell"))
-      .write.mode("append").partitionBy("cell").parquet(s"$path/cells")
-  }
-
-  /** Load an IVF index with upserts applied: centroids + the LATEST
-    * version of every vector (max `__seq` per `idCol`; ties broken to
-    * the base — callers must use distinct positive stamps per
-    * upsert). One window shuffle on the id — the read-side cost of
-    * the append-only write path.
-    */
-  def readIvfIndexLatest(
-      spark: SparkSession,
-      path: String,
-      idCol: String): (Seq[Array[Double]], DataFrame) = {
-    val cents = spark.read.parquet(s"$path/centroids")
-      .orderBy(col("cell"))
-      .collect()
-      .map(_.getAs[scala.collection.Seq[Double]]("centroid").toArray)
-      .toSeq
-    val cells = spark.read.parquet(s"$path/cells")
-      .withColumn("__seq", coalesce(col("__seq"), lit(0L)))
-    val latest = graft.operators.Relational
-      .dedupeFirstWins(cells, Seq(col(idCol)), Seq(col("__seq").desc))
-    (cents, applyTombstones(latest, idCol, path))
-  }
-
-  /** TIME TRAVEL over the seq-versioned IVF layout:
-    * [[readIvfIndexLatest]] restricted to upserts with
-    * `__seq <= asOfSeq` — the index exactly as it stood before later
-    * batches landed. The versioned upsert layout (stamped appends,
-    * never in-place rewrites) is what makes this a FILTER rather
-    * than a restore: reproduce yesterday's retrieval for an audit,
-    * bisect a quality regression to the batch that introduced it, or
-    * roll a bad upsert back by re-publishing its predecessor.
-    * Tombstones are NOT applied — deletes carry their own seq
-    * lifecycle and an as-of read predates them by definition of the
-    * audit use; compose with [[applyTombstones]] if needed.
-    */
-  def readIvfIndexAsOf(
-      spark: SparkSession,
-      path: String,
-      idCol: String,
-      asOfSeq: Long): (Seq[Array[Double]], DataFrame) = {
-    val cents = spark.read.parquet(s"$path/centroids")
-      .orderBy(col("cell"))
-      .collect()
-      .map(_.getAs[scala.collection.Seq[Double]]("centroid").toArray)
-      .toSeq
-    val cells = spark.read.parquet(s"$path/cells")
-      .withColumn("__seq", coalesce(col("__seq"), lit(0L)))
-      .filter(col("__seq") <= asOfSeq)
-    val latest = graft.operators.Relational
-      .dedupeFirstWins(cells, Seq(col(idCol)), Seq(col("__seq").desc))
-    (cents, latest)
-  }
-
-  /** Persist a PQ index: `path/codebooks` (sub, cell, centroid) and
-    * `path/codes` — the byte-coded corpus (the pq_* columns replace
-    * the full vectors in the scan; keep the embedding column in
-    * `codes` only if the exact re-rank should read it from the index
-    * rather than joining back to the corpus).
-    */
-  def writePqIndex(
-      codes: DataFrame,
-      codebooks: Seq[Seq[Array[Double]]],
-      path: String): Unit = {
-    val spark = codes.sparkSession
-    import spark.implicits._
-    codebooks.zipWithIndex
-      .flatMap { case (subCents, s) =>
-        subCents.zipWithIndex.map { case (c, i) => (s, i, c.toSeq) }
-      }
-      .toDF("sub", "cell", "centroid")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/codebooks")
-    // base rows carry upsert-stamp 0, the writeIvfIndex rule: one
-    // schema shared with later upsertPqIndex appends
-    codes
-      .withColumn("__seq", lit(0L))
-      .write.mode("overwrite").parquet(s"$path/codes")
-  }
-
-  /** Load a PQ index written by [[writePqIndex]]: (codebooks indexed
-    * [sub][cell], coded corpus). Upsert stamps are dropped — use
-    * [[readPqIndexLatest]] when the index has live upserts.
-    */
-  def readPqIndex(
-      spark: SparkSession,
-      path: String): (Seq[Seq[Array[Double]]], DataFrame) = {
-    (readPqCodebooks(spark, path), spark.read.parquet(s"$path/codes").drop("__seq"))
-  }
-
-  /** Incremental PQ upsert — [[upsertIvfIndex]]'s mirror for the
-    * byte-coded layout: `codes` (new/changed vectors already ENCODED
-    * against the index's FROZEN codebooks via
-    * [[graft.operators.Similarity.pqEncode]]) appends with a caller
-    * seq stamp; no rewrite of existing files, no re-fit.
-    * [[readPqIndexLatest]] resolves replaced ids last-wins on the
-    * stamp. (Re-fitting codebooks is a REBUILD — encoding against
-    * frozen codebooks keeps the increment cheap at the cost of drift
-    * the caller monitors, the exact IVF-centroid tradeoff.)
-    */
-  def upsertPqIndex(codes: DataFrame, path: String, seq: Long): Unit = {
-    require(seq > 0L, "upsert seq must be positive (0 is the base build's stamp)")
-    codes
-      .withColumn("__seq", lit(seq))
-      .write.mode("append").parquet(s"$path/codes")
-  }
-
-  /** Load a PQ index with upserts applied: codebooks + the LATEST
-    * version of every code row (max `__seq` per `idCol`, ties to the
-    * base — distinct positive stamps per upsert). One window shuffle
-    * on the id, the read-side cost of the append-only write path —
-    * identical to [[readIvfIndexLatest]]'s contract.
-    */
-  def readPqIndexLatest(
-      spark: SparkSession,
-      path: String,
-      idCol: String): (Seq[Seq[Array[Double]]], DataFrame) = {
-    val codes = spark.read.parquet(s"$path/codes")
-      .withColumn("__seq", coalesce(col("__seq"), lit(0L)))
-    val latest = graft.operators.Relational
-      .dedupeFirstWins(codes, Seq(col(idCol)), Seq(col("__seq").desc))
-    (readPqCodebooks(spark, path), applyTombstones(latest, idCol, path))
-  }
-
-  /** Time-travel read of a PQ index AS OF `asOfSeq` — completes as-of
-    * symmetry across all five artifact families (IVF, dup-graph,
-    * postings, phash, PQ): code rows and tombstones restricted to
-    * stamps ≤ the clock, then [[readPqIndexLatest]]'s last-wins
-    * resolution. Codebooks are frozen at build time, so they need no
-    * clock.
-    */
-  def readPqIndexAsOf(
-      spark: SparkSession,
-      path: String,
-      idCol: String,
-      asOfSeq: Long): (Seq[Seq[Array[Double]]], DataFrame) = {
-    require(asOfSeq >= 0L, "asOfSeq must be >= 0")
-    val codes = spark.read.parquet(s"$path/codes")
-      .withColumn("__seq", coalesce(col("__seq"), lit(0L)))
-      .filter(col("__seq") <= asOfSeq)
-    val latest = graft.operators.Relational
-      .dedupeFirstWins(codes, Seq(col(idCol)), Seq(col("__seq").desc))
-    (readPqCodebooks(spark, path), applyTombstones(latest, idCol, path, Some(asOfSeq)))
-  }
-
-  private def readPqCodebooks(spark: SparkSession, path: String): Seq[Seq[Array[Double]]] =
-    spark.read.parquet(s"$path/codebooks")
-      .orderBy(col("sub"), col("cell"))
-      .collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getAs[scala.collection.Seq[Double]](2).toArray))
-      .groupBy(_._1)
-      .toSeq
-      .sortBy(_._1)
-      .map(_._2.sortBy(_._2).map(_._3).toSeq)
-
-  /** The IVF index's coarse centroids as a FRAME — (cell int,
-    * ce array<double>), the exact shape
-    * [[graft.operators.Similarity.ivfPqTopKBatch]] consumes. The
-    * single-query readers ([[readIvfIndex]]) collect the centroid
-    * table into driver literals because a one-off probe bakes its
-    * query into the plan anyway; the BATCHED serving path must stay
-    * literal-free end-to-end, so this reader keeps the nlist-bounded
-    * table in-plan — Catalyst broadcasts it into the probe
-    * crossJoin, nothing ever touches the driver.
-    */
-  def readIvfCentroidFrame(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/centroids")
-      .select(
-        col("cell").cast("int").as("cell"),
-        col("centroid").cast("array<double>").as("ce"))
-
-  /** The PQ index's codebooks as a FRAME — (s int, code int,
-    * be array<double>), [[graft.operators.Similarity.ivfPqTopKBatch]]'s
-    * codebook shape: one row per (subspace, code word). S·K rows
-    * total (bounded by the index geometry, never the corpus), kept
-    * in-plan for the batched ADC-table build — the collect-backed
-    * [[readPqCodebooks]] stays the single-query bootstrap's reader.
-    */
-  def readPqCodebookFrame(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/codebooks")
-      .select(
-        col("sub").cast("int").as("s"),
-        col("cell").cast("int").as("code"),
-        col("centroid").cast("array<double>").as("be"))
 }

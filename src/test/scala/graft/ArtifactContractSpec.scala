@@ -9,12 +9,8 @@ import org.apache.spark.sql.functions._
   * families (IVF, PQ, postings, phash, dup graph, minhash
   * signatures, LM count grids, value grid), so a family
   * drifting from the shared as-of/compaction semantics fails HERE
-  * even if its own suite forgot the clause. The lifecycle under test
-  * is upsert-only (deletes have per-family tombstone-visibility
-  * differences that each family's own spec pins — IVF/PQ as-of
-  * deliberately ignores tombstones, dup-graph/postings/phash as-of
-  * applies them at the clock); the four clauses every family must
-  * agree on:
+  * even if its own suite forgot the clause. The four clauses every
+  * family must agree on under upserts:
   *
   *   1. as-of 0       == the base build's view
   *   2. as-of mid     == the view right after that stamp's upsert
@@ -23,9 +19,15 @@ import org.apache.spark.sql.functions._
   *                    (post-compact as-of 0 == live: one-generation
   *                    rewrite at stamp 0)
   *
-  * Each family supplies build/upsert/live/asOf/compact and a
+  * plus, for the four row-versioned families (IVF, PQ, phash, minhash
+  * signatures), the tombstone clause: a delete at stamp s is visible
+  * to as-of reads at s and above, invisible below s; and, for every
+  * family, the on-disk layout (child dirs, data and partition
+  * columns) after build + upsert + delete and after compaction.
+  *
+  * Each family supplies build/upsert/delete/live/asOf/compact and a
   * canonical Set[String] rendering of its view; the clauses run
-  * verbatim over all five.
+  * verbatim over all of them.
   */
 class ArtifactContractSpec extends SparkSpec {
   import spark.implicits._
@@ -44,6 +46,10 @@ class ArtifactContractSpec extends SparkSpec {
     def name: String
     def build(dir: String): Unit
     def upsert(dir: String, seq: Long): Unit
+    /** Removes base id 2 (its doc, code, pairs or counts) at `seq`. */
+    def delete(dir: String, seq: Long): Unit
+    /** Last-wins per id with tombstones (views render the id first). */
+    def rowVersioned: Boolean = false
     def live(dir: String): Set[String]
     def asOf(dir: String, seq: Long): Set[String]
     def compact(dir: String): Unit
@@ -56,8 +62,12 @@ class ArtifactContractSpec extends SparkSpec {
     (1L, seq * 10 + 2, 1)            // id 1 re-assigned every stamp
   ).toDF("id", "v", "cell")
 
+  private def id2 = Seq(2L).toDF("id")
+
   private object IvfFamily extends Family {
     val name = "ivf"
+    override def rowVersioned = true
+    def delete(dir: String, seq: Long): Unit = Io.deleteIvfIds(id2, dir, seq)
     def build(dir: String): Unit = Io.writeIvfIndex(
       Seq((1L, 1L, 0), (2L, 2L, 1)).toDF("id", "v", "cell"),
       Seq(Array(0.0, 1.0), Array(1.0, 0.0)),
@@ -72,6 +82,8 @@ class ArtifactContractSpec extends SparkSpec {
 
   private object PqFamily extends Family {
     val name = "pq"
+    override def rowVersioned = true
+    def delete(dir: String, seq: Long): Unit = Io.deletePqIds(id2, dir, seq)
     def build(dir: String): Unit = Io.writePqIndex(
       Seq((1L, 0, 1), (2L, 1, 0)).toDF("id", "pq_0", "pq_1"),
       Seq(Seq(Array(0.0), Array(1.0)), Seq(Array(0.0), Array(1.0))),
@@ -92,6 +104,7 @@ class ArtifactContractSpec extends SparkSpec {
 
   private object PostingsFamily extends Family {
     val name = "postings"
+    def delete(dir: String, seq: Long): Unit = Io.deletePostingsDocs(id2, dir, seq)
     def build(dir: String): Unit =
       Io.writePostings(postingsIndex(Seq(1L -> "alpha beta", 2L -> "gamma")), dir, buckets = 4)
     def upsert(dir: String, seq: Long): Unit = Io.upsertPostings(
@@ -108,6 +121,8 @@ class ArtifactContractSpec extends SparkSpec {
 
   private object PhashFamily extends Family {
     val name = "phash"
+    override def rowVersioned = true
+    def delete(dir: String, seq: Long): Unit = Io.deletePhashIds(id2, dir, seq)
     def build(dir: String): Unit = Io.writePhashIndex(
       Seq((1L, 0xA0L, 0L), (2L, 0xB1L, 1L)).toDF("id", "code", "pfx"), dir)
     def upsert(dir: String, seq: Long): Unit = Io.upsertPhashIndex(
@@ -127,6 +142,7 @@ class ArtifactContractSpec extends SparkSpec {
 
   private object DupGraphFamily extends Family {
     val name = "dupgraph"
+    def delete(dir: String, seq: Long): Unit = Io.deleteDupGraphDocs(id2, dir, seq)
     def build(dir: String): Unit =
       Io.writeDupGraph(Seq((1L, 2L), (3L, 4L)).toDF("id_a", "id_b"), dir, buckets = 4)
     def upsert(dir: String, seq: Long): Unit = Io.upsertDupGraph(
@@ -144,6 +160,8 @@ class ArtifactContractSpec extends SparkSpec {
 
   private object MinhashSigsFamily extends Family {
     val name = "minhashsigs"
+    override def rowVersioned = true
+    def delete(dir: String, seq: Long): Unit = Io.deleteMinhashIds(id2, dir, seq)
     def build(dir: String): Unit = Io.writeMinhashSigs(
       signed(Seq(1L -> "alpha beta gamma delta", 2L -> "one two three four")),
       dir, buckets = 4)
@@ -182,6 +200,11 @@ class ArtifactContractSpec extends SparkSpec {
     def asOf(dir: String, seq: Long) = {
       val (u, b) = Io.readLmCountsAsOf(spark, dir, seq); view(u, b)
     }
+    def delete(dir: String, seq: Long): Unit = {
+      // takedown of doc 2: its grids appended NEGATED
+      val (u, b) = lmGrids(Seq(2L -> "gamma alpha"))
+      Io.upsertLmCounts(u.withColumn("cnt", -col("cnt")), b.withColumn("cab", -col("cab")), dir, seq)
+    }
     def compact(dir: String): Unit = Io.compactLmCounts(spark, dir)
     def plain(dir: String) = live(dir) // the merged reader IS the plain reader
   }
@@ -202,6 +225,8 @@ class ArtifactContractSpec extends SparkSpec {
       vg(Seq(("2026-01-01", 100L, seq), ("2026-01-03", 300L + seq * 10, 1L))), dir, seq)
     def live(dir: String) = view(Io.readValueGrid(spark, dir))
     def asOf(dir: String, seq: Long) = view(Io.readValueGridAsOf(spark, dir, seq))
+    def delete(dir: String, seq: Long): Unit =
+      Io.upsertValueGrid(vg(Seq(("2026-01-02", 200L, -1L))), dir, seq)
     def compact(dir: String): Unit = Io.compactValueGrid(spark, dir)
     def plain(dir: String) = live(dir) // the merged reader IS the plain reader
   }
@@ -288,4 +313,87 @@ class ArtifactContractSpec extends SparkSpec {
       assert(f.asOf(dir, 0L) == preCompact, s"${f.name}: compact must forfeit history")
     }
   }
+
+  /** The on-disk layout under `dir`: one "child/dir/part=* : cols" line
+    * per distinct (directory, parquet data columns) pair, partition
+    * values folded to `*`, columns in file order from each footer.
+    */
+  private def layout(dir: String): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(conf)
+    val rootPath = fs.makeQualified(root).toUri.getPath
+    val files = fs.listFiles(root, true)
+    Iterator.continually(files).takeWhile(_.hasNext).map(_.next().getPath)
+      .filter(_.getName.endsWith(".parquet"))
+      .map { p =>
+        val rel = p.getParent.toUri.getPath.stripPrefix(rootPath).stripPrefix("/")
+          .split("/").map(s => if (s.contains("=")) s.takeWhile(_ != '=') + "=*" else s)
+          .mkString("/")
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
+        val cols =
+          try r.getFooter.getFileMetaData.getSchema.getFields.asScala.map(_.getName).mkString(",")
+          finally r.close()
+        s"${if (rel.isEmpty) "." else rel} : $cols"
+      }
+      .toSet
+  }
+
+  /** Per family: the layout after build + upsert(1) + delete(2), and
+    * after compacting that state.
+    */
+  private val expectedLayouts: Map[String, (Set[String], Set[String])] = {
+    val tomb = "_tombstones : id,seq"
+    def tombstoned(compacted: String*) = (compacted.toSet + tomb, compacted.toSet)
+    def same(layout: String*) = (layout.toSet, layout.toSet)
+    Map(
+      "ivf" -> tombstoned("centroids : cell,centroid", "cells/cell=* : id,v,__seq"),
+      "pq" -> tombstoned("codebooks : sub,cell,centroid", "codes : id,pq_0,pq_1,__seq"),
+      "postings" -> same(
+        "term_bucket=* : term,id,positions,__seq", "_docseq : id,seq,deleted",
+        "_doclen : id,dl,seq", "_meta : buckets"),
+      "phash" -> tombstoned("pfx=* : id,code,__seq"),
+      "dupgraph" -> tombstoned(
+        "pairs/pair_bucket=* : id_a,id_b,__seq", "labels/id_bucket=* : id,cluster_id",
+        "_meta : buckets,pairs_schema,labels_schema"),
+      "minhashsigs" -> tombstoned(
+        "sigs/id_bucket=* : id,sig,hs,__seq", "_meta : buckets,sigs_schema"),
+      "lmcounts" -> same(
+        "uni/term_bucket=* : term,cnt,__seq", "bi/prev_bucket=* : prev,term,cab,__seq",
+        "_meta : buckets,uni_schema,bi_schema"),
+      "valuegrid" -> same("grid/day_bucket=* : day,v,n,__seq", "_meta : buckets,grid_schema"))
+  }
+
+  for (f <- families) {
+    test(s"[${f.name}] on-disk layout after build + upsert + delete, and after compaction") {
+      val dir = tmp(s"contract_${f.name}l") + "/art"
+      f.build(dir)
+      f.upsert(dir, 1L)
+      f.delete(dir, 2L)
+      val written = layout(dir)
+      f.compact(dir)
+      val compacted = layout(dir)
+      assert(expectedLayouts.get(f.name).contains((written, compacted)),
+        s"${f.name}: layout drifted\n${written.toSeq.sorted.mkString("\n")}\n--\n${compacted.toSeq.sorted.mkString("\n")}")
+    }
+  }
+
+  for (f <- families.filter(_.rowVersioned)) {
+    test(s"[${f.name}] tombstones: as-of hides a delete from its stamp on, as-of max == live") {
+      val dir = tmp(s"contract_${f.name}t") + "/art"
+      f.build(dir)
+      f.upsert(dir, 1L)
+      f.delete(dir, 2L)
+      f.upsert(dir, 3L)
+      def has2(view: Set[String]) = view.exists(_.startsWith("[2,"))
+      assert(has2(f.asOf(dir, 1L)), s"${f.name}: id 2 missing before its delete")
+      assert(!has2(f.asOf(dir, 2L)), s"${f.name}: id 2 served as-of its delete stamp")
+      val live = f.live(dir)
+      assert(!has2(live), s"${f.name}: id 2 served live after its delete")
+      assert(f.asOf(dir, 3L) == live, s"${f.name}: as-of max != live view")
+    }
+  }
+
 }

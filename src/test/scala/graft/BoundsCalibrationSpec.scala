@@ -86,7 +86,7 @@ class BoundsCalibrationSpec extends SparkSpec {
     "Similarity.scala" -> 31,
     "Sketches.scala" -> 6,
     "TextAnalysis.scala" -> 21,
-    "Io.scala" -> 27)
+    "Io.scala" -> 11)
 
   /** Every data-magnitude guard's message carries a distinctive
     * marker; each (file, marker) must appear exactly the expected

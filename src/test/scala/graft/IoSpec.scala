@@ -432,7 +432,7 @@ class IoSpec extends SparkSpec {
     assert(Io.postingsBucketCount(spark, dir) == 4)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(dir + "__compacting")))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(dir + "_compacting")))
   }
 
   test("compactIvfIndex: plain reader equals the latest view, tombstone sidecar removed") {

@@ -61,7 +61,7 @@ class PlanHygieneSpec extends AnyFunSuite {
     "operators/Sampling.scala" -> 3,
     "operators/Similarity.scala" -> 8,
     "operators/TextAnalysis.scala" -> 1,
-    "sources/Io.scala" -> 5)
+    "sources/Io.scala" -> 3)
 
   /** mapPartitions sites: Relational's two-pass globalRank/globalCumSum
     * partition-boundary collects (4), Series' documented O(1)-state
