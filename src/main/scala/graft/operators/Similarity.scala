@@ -974,8 +974,12 @@ object Similarity {
   }
 
   /** IVF top-k: probe only the query's `nprobe` nearest cells, then
-    * exact rank inside the probed subset. At 1000 executors this reads
-    * `nprobe/nlist` of the corpus instead of all of it.
+    * exact rank inside the probed subset. Over a cell-partitioned
+    * index ([[graft.sources.Io.writeIvfIndex]], read plain or through
+    * [[graft.sources.Io.readIvfIndexLatest]]) the cell filter prunes
+    * the scan to the probed cells' files, so a probe reads
+    * `nprobe/nlist` of the corpus instead of all of it; over an
+    * unpartitioned frame it is a post-scan filter.
     */
   def ivfTopK(
       assigned: DataFrame,

@@ -1,8 +1,9 @@
 package graft.sources
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import scala.jdk.CollectionConverters._
 
 /** SURVEY §2.1 — sources and sinks. The reference's edges are JSON
   * (pretty + JSONL), text files and blob stores; the engine
@@ -197,9 +198,11 @@ object Io {
   // it every time. These sinks/sources make the fit a one-time cost:
   // centroids/codebooks are tiny parquet side tables, and the
   // assigned corpus is laid out partitioned BY CELL so an IVF probe
-  // reads only the probed cells' directories (partition pruning does
-  // the nprobe/nlist read at the FILE level, not with a post-scan
-  // filter).
+  // reads only the probed cells' directories: the probe's `cell IN`
+  // filter reaches the scan as a partition filter (nprobe/nlist of
+  // the files), through the latest read too, because that read
+  // resolves last-wins when the index is OPENED ([[readLastWins]])
+  // and leaves no window in the served plan.
   //
   // Every derived artifact below (IVF cells, PQ codes, postings, phash
   // codes, dup-graph pairs, MinHash signatures, LM count grids, value
@@ -217,7 +220,8 @@ object Io {
   //            restore), in one of four shapes:
   //              row-versioned (IVF cells, PQ codes, phash, MinHash
   //                sigs): last-wins per id minus the tombstones at or
-  //                above the row's stamp ([[readLastWins]])
+  //                above the row's stamp, resolved at open
+  //                ([[readLastWins]])
   //              edge set (dup-graph pairs): union; a tombstone hides
   //                the pairs on either endpoint ([[hideTombstoned]])
   //              doc-versioned (postings): max stamp per doc from the
@@ -278,20 +282,41 @@ object Io {
     stamped.schema
   }
 
-  /** Read a stamped dir: with the family's persisted schema when it
-    * has one (an EMPTY artifact writes a fileless dir, and schema
-    * inference on it throws — supplied, it reads as an empty frame),
-    * `__seq` defaulted to 0, and restricted to stamps <= `asOf`.
+  /** A stamped dir's files as written: with the family's persisted
+    * schema when it has one (an EMPTY artifact writes a fileless dir,
+    * and schema inference on it throws — supplied, it reads as an
+    * empty frame). One file listing, taken here.
     */
+  private def readFiles(spark: SparkSession, dir: String, schema: Option[StructType]): DataFrame =
+    schema.fold(spark.read)(s => spark.read.schema(s)).parquet(dir)
+
+  /** `files`' rows with `__seq` defaulted to 0, restricted to stamps
+    * <= `asOf`.
+    */
+  private def stamped(files: DataFrame, asOf: Option[Long]): DataFrame = {
+    asOf.foreach(m => require(m >= 0L, "asOfSeq must be >= 0"))
+    val rows = files.withColumn("__seq", coalesce(col("__seq"), lit(0L)))
+    asOf.fold(rows)(m => rows.filter(col("__seq") <= m))
+  }
+
   private def readStamped(
       spark: SparkSession,
       dir: String,
       schema: Option[StructType] = None,
-      asOf: Option[Long] = None): DataFrame = {
-    asOf.foreach(m => require(m >= 0L, "asOfSeq must be >= 0"))
-    val rows = schema.fold(spark.read)(s => spark.read.schema(s)).parquet(dir)
-      .withColumn("__seq", coalesce(col("__seq"), lit(0L)))
-    asOf.fold(rows)(m => rows.filter(col("__seq") <= m))
+      asOf: Option[Long] = None): DataFrame =
+    stamped(readFiles(spark, dir, schema), asOf)
+
+  /** The parquet rows of `path`'s underscore sidecar `name`, read
+    * through its listed files: Spark's file index treats a leaf path
+    * that starts with `_` as hidden and warns "All paths were ignored"
+    * when the sidecar dir itself is the read path (the rows come back
+    * either way), and a glob read path warns with a stack trace.
+    */
+  private def readSidecar(spark: SparkSession, path: String, name: String): DataFrame = {
+    val dir = new org.apache.hadoop.fs.Path(s"$path/$name")
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    spark.read.parquet(
+      fs.listStatus(dir).map(_.getPath).filter(_.getName.endsWith(".parquet")).map(_.toString).toIndexedSeq: _*)
   }
 
   // ---- tombstone deletes (takedown / right-to-be-forgotten) -------
@@ -319,6 +344,21 @@ object Io {
     idStamps(ids, seq).write.mode("append").parquet(s"$path/_tombstones")
   }
 
+  /** `path`'s tombstones (id, seq) visible at the `asOf` clock, if it
+    * has a `_tombstones` sidecar.
+    */
+  private def readTombstones(
+      spark: SparkSession,
+      path: String,
+      asOf: Option[Long]): Option[DataFrame] = {
+    val p = new org.apache.hadoop.fs.Path(s"$path/_tombstones")
+    if (!p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)) None
+    else {
+      val all = readSidecar(spark, path, "_tombstones")
+      Some(asOf.fold(all)(m => all.filter(col("seq") <= m)))
+    }
+  }
+
   /** Drop the rows of `rows` (which carry `__seq`) where any of
     * `idCols` has a tombstone at or above the row's stamp. `asOf`
     * restricts which tombstones are VISIBLE (the as-of read's clock).
@@ -327,24 +367,37 @@ object Io {
       rows: DataFrame,
       idCols: Seq[String],
       path: String,
-      asOf: Option[Long]): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_tombstones")
-    if (!p.getFileSystem(rows.sparkSession.sessionState.newHadoopConf()).exists(p)) rows
-    else {
-      val all = rows.sparkSession.read.parquet(s"$path/_tombstones")
-      val tmax = asOf.fold(all)(m => all.filter(col("seq") <= m))
-        .groupBy(col("id").as("__tid"))
-        .agg(max(col("seq")).as("__tseq"))
+      asOf: Option[Long]): DataFrame =
+    readTombstones(rows.sparkSession, path, asOf).fold(rows) { all =>
+      val tmax = all.groupBy(col("id").as("__tid")).agg(max(col("seq")).as("__tseq"))
       idCols.foldLeft(rows)((r, id) =>
         r.join(tmax, col(id) === col("__tid") && col("__seq") <= col("__tseq"), "left_anti"))
     }
-  }
 
   /** The row-versioned resolution: the LATEST version of every
-    * `idCol` under `dir` (max `__seq`; ties broken to the base —
-    * callers use distinct positive stamps), minus tombstoned ids, at
-    * the `asOf` clock or live. One window shuffle on the id — the
-    * read-side cost of the append-only write path. Stamps dropped.
+    * `idCol` under `dir` (max `__seq`), minus tombstoned ids, at the
+    * `asOf` clock or live. Stamps dropped.
+    *
+    * "Latest" is resolved once, here, when the artifact is opened: a
+    * version at stamp s is stale iff its id has an upsert above s or
+    * a tombstone at or above s, so only the ids stamped > 0 (the
+    * upserts and tombstones since the last compaction) can hide
+    * anything. Their narrow (id, stamp) rows are collected into a
+    * local relation of per-id bounds — hide every version below the
+    * bound — and the served frame is the versions left-anti-joined
+    * against it. The collect and the served scan share ONE file
+    * listing, so an append landing in between is seen by neither.
+    * A query over the frame then runs no window and no shuffle:
+    * filters on partition columns (an IVF probe's `cell IN`) push
+    * through the anti-join to the file level, and the bounds
+    * broadcast as one small job; with no upserts or
+    * tombstones the join folds away and the query is the scan alone.
+    * The id is the whole join key, so a stale copy an upsert left in
+    * another cell or bucket stays hidden.
+    *
+    * Rows sharing an (id, stamp) pair all survive (none has a higher
+    * stamp), as do rows with a null id (no stamp or tombstone can
+    * match a null); callers use distinct stamps and non-null ids.
     */
   private def readLastWins(
       spark: SparkSession,
@@ -353,9 +406,25 @@ object Io {
       idCol: String,
       schema: Option[StructType] = None,
       asOf: Option[Long] = None): DataFrame = {
-    val latest = graft.operators.Relational.dedupeFirstWins(
-      readStamped(spark, dir, schema, asOf), Seq(col(idCol)), Seq(col("__seq").desc))
-    hideTombstoned(latest, Seq(idCol), path, asOf).drop("__seq")
+    val files = readFiles(spark, dir, schema)
+    val idType = files.schema(idCol).dataType
+    // the RAW stamp: parquet stats skip the stamp-0 base files, which
+    // a filter on coalesce(__seq, 0) would not push down
+    val upserts = files
+      .filter(col("__seq") > 0L && asOf.fold(lit(true))(m => col("__seq") <= m))
+      .select(col(idCol).as("id"), col("__seq").as("below"))
+    val marks = readTombstones(spark, path, asOf).fold(upserts)(t =>
+      upserts.unionByName(t.select(col("id").cast(idType).as("id"), (col("seq") + 1L).as("below"))))
+    // one row per version upserted or tombstoned since the last
+    // compaction (which restamps every live row to 0 and purges the
+    // tombstones): the mutation history, never the index
+    val bounds = marks.collect().groupMapReduce(_.get(0))(_.getLong(1))(math.max)
+    val hidden = spark.createDataFrame(
+      bounds.toSeq.map { case (id, below) => Row(id, below) }.asJava,
+      StructType(Seq(StructField("__hid", idType), StructField("__hbelow", LongType))))
+    stamped(files, asOf)
+      .join(hidden, col(idCol) === col("__hid") && col("__seq") < col("__hbelow"), "left_anti")
+      .drop("__seq")
   }
 
   /** The linear-counts resolution: SUM `count` per `keys`; keys whose
@@ -405,7 +474,7 @@ object Io {
       spark: SparkSession,
       path: String,
       schemas: String*): (Int, Seq[StructType]) = {
-    val m = spark.read.parquet(s"$path/_meta").select(("buckets" +: schemas).map(col): _*).head()
+    val m = readSidecar(spark, path, "_meta").select(("buckets" +: schemas).map(col): _*).head()
     (m.getInt(0), schemas.indices.map(i => schemaOf(m.getString(i + 1))))
   }
 
@@ -743,8 +812,8 @@ object Io {
       spark: SparkSession,
       path: String,
       asOf: Option[Long]): DataFrame = {
-    val raw = asOf.fold(spark.read.parquet(s"$path/_docseq"))(m =>
-      spark.read.parquet(s"$path/_docseq").filter(col("seq") <= m))
+    val all = readSidecar(spark, path, "_docseq")
+    val raw = asOf.fold(all)(m => all.filter(col("seq") <= m))
     val withFlag =
       if (raw.columns.contains("deleted"))
         raw.withColumn("deleted", coalesce(col("deleted"), lit(false)))
@@ -792,7 +861,7 @@ object Io {
     * .bm25FromPostings]]); doc-count-bounded, no corpus scan.
     */
   def readPostingsDocLengths(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/_doclen")
+    readSidecar(spark, path, "_doclen")
       .join(
         livePostingsDocs(spark, path, None),
         col("id") === col("__did") && col("seq") === col("__max_seq"))
@@ -1113,9 +1182,10 @@ object Io {
     * image whose code changed may land in a DIFFERENT `pfx` directory
     * than its old version — [[readPhashIndexLatest]] resolves
     * last-wins per id across buckets, which is why the latest reader
-    * (not a bucket-pruned raw scan) is the correct consumer of an
-    * upserted index; after [[compactPhashIndex]] the stale row is
-    * physically gone and bucket pruning is safe again.
+    * (not the raw scan) is the correct consumer of an upserted index:
+    * a `pfx` filter over it still prunes to the bucket directories
+    * and the stale row stays hidden. After [[compactPhashIndex]] the
+    * stale row is physically gone and the raw scan is correct again.
     */
   def upsertPhashIndex(codes: DataFrame, path: String, seq: Long): Unit =
     writeStamped(codes, path, Some("pfx"), Some(seq))
@@ -1253,7 +1323,7 @@ object Io {
   /** Load a [[writeBpeVocab]] artifact: (w, units). */
   def readBpeVocab(spark: SparkSession, path: String): DataFrame = {
     val schema = schemaOf(
-      spark.read.parquet(s"$path/_meta").select(col("units_schema")).head().getString(0))
+      readSidecar(spark, path, "_meta").select(col("units_schema")).head().getString(0))
     spark.read.schema(schema).parquet(s"$path/units")
   }
 
@@ -1296,7 +1366,7 @@ object Io {
   def readLmModel(
       spark: SparkSession,
       path: String): (DataFrame, DataFrame, Long, Long) = {
-    val m = spark.read.parquet(s"$path/_meta")
+    val m = readSidecar(spark, path, "_meta")
       .select(col("oov6"), col("oovbo6"), col("bi_schema"), col("uni_schema"))
       .head()
     val bi = spark.read.schema(schemaOf(m.getString(2))).parquet(s"$path/bigrams")

@@ -396,4 +396,135 @@ class ArtifactContractSpec extends SparkSpec {
     }
   }
 
+  /** A row-versioned family's raw operations for the history clause:
+    * `put` writes (id, payload, cell/bucket) rows as the stamp-0 base
+    * or upserts them at `seq`; `drop` tombstones `ids` at `seq`;
+    * `live`/`asOf` render the resolved (id, payload) rows, one string
+    * per row, sorted (duplicates stay visible).
+    */
+  private trait History {
+    def name: String
+    def put(dir: String, seq: Long, rows: Seq[(Long, Long, Int)]): Unit
+    def drop(dir: String, seq: Long, ids: Seq[Long]): Unit
+    def live(dir: String): Seq[String]
+    def asOf(dir: String, seq: Long): Seq[String]
+  }
+
+  private def view(df: DataFrame, payload: String): Seq[String] =
+    df.select(col("id"), col(payload)).collect().map(_.toString).toSeq.sorted
+
+  private object IvfHistory extends History {
+    val name = "ivf"
+    def put(dir: String, seq: Long, rows: Seq[(Long, Long, Int)]): Unit = {
+      val df = rows.toDF("id", "v", "cell")
+      if (seq == 0L) Io.writeIvfIndex(df, Seq(Array(0.0, 1.0), Array(1.0, 0.0)), dir)
+      else Io.upsertIvfIndex(df, dir, seq)
+    }
+    def drop(dir: String, seq: Long, ids: Seq[Long]): Unit =
+      Io.deleteIvfIds(ids.toDF("id"), dir, seq)
+    def live(dir: String) = view(Io.readIvfIndexLatest(spark, dir, "id")._2, "v")
+    def asOf(dir: String, seq: Long) = view(Io.readIvfIndexAsOf(spark, dir, "id", seq)._2, "v")
+  }
+
+  private object PqHistory extends History {
+    val name = "pq"
+    def put(dir: String, seq: Long, rows: Seq[(Long, Long, Int)]): Unit = {
+      val df = rows.map { case (id, v, c) => (id, v.toInt, c) }.toDF("id", "pq_0", "pq_1")
+      if (seq == 0L) Io.writePqIndex(df, Seq(Seq(Array(0.0), Array(1.0))), dir)
+      else Io.upsertPqIndex(df, dir, seq)
+    }
+    def drop(dir: String, seq: Long, ids: Seq[Long]): Unit =
+      Io.deletePqIds(ids.toDF("id"), dir, seq)
+    def live(dir: String) = view(Io.readPqIndexLatest(spark, dir, "id")._2, "pq_0")
+    def asOf(dir: String, seq: Long) = view(Io.readPqIndexAsOf(spark, dir, "id", seq)._2, "pq_0")
+  }
+
+  private object PhashHistory extends History {
+    val name = "phash"
+    def put(dir: String, seq: Long, rows: Seq[(Long, Long, Int)]): Unit = {
+      val df = rows.map { case (id, v, c) => (id, v, c.toLong) }.toDF("id", "code", "pfx")
+      if (seq == 0L) Io.writePhashIndex(df, dir) else Io.upsertPhashIndex(df, dir, seq)
+    }
+    def drop(dir: String, seq: Long, ids: Seq[Long]): Unit =
+      Io.deletePhashIds(ids.toDF("id"), dir, seq)
+    def live(dir: String) = view(Io.readPhashIndexLatest(spark, dir), "code")
+    def asOf(dir: String, seq: Long) = view(Io.readPhashIndexAsOf(spark, dir, seq), "code")
+  }
+
+  private object MinhashHistory extends History {
+    val name = "minhashsigs"
+    def put(dir: String, seq: Long, rows: Seq[(Long, Long, Int)]): Unit = {
+      // the signature's bucket is hash(id): the payload rides as `v`
+      val df = rows
+        .map { case (id, v, _) => signed(Seq(id -> s"doc $id revision $v body")).withColumn("v", lit(v)) }
+        .reduce(_ unionByName _)
+      if (seq == 0L) Io.writeMinhashSigs(df, dir, buckets = 4)
+      else Io.upsertMinhashSigs(df, dir, seq)
+    }
+    def drop(dir: String, seq: Long, ids: Seq[Long]): Unit =
+      Io.deleteMinhashIds(ids.toDF("id"), dir, seq)
+    def live(dir: String) = view(Io.readMinhashSigsLatest(spark, dir), "v")
+    def asOf(dir: String, seq: Long) = view(Io.readMinhashSigsAsOf(spark, dir, seq), "v")
+  }
+
+  private val histories: Seq[History] = Seq(IvfHistory, PqHistory, PhashHistory, MinhashHistory)
+
+  /** One history per row-versioned family. Stamp 0: the base; 1: id 1
+    * upserted into another cell/bucket; 2: id 2 deleted; 3: id 2
+    * re-upserted; 4: id 3 upserted into another cell; 5: id 3 deleted.
+    */
+  private def writeHistory(h: History, dir: String): Unit = {
+    h.put(dir, 0L, Seq((1L, 10L, 0), (2L, 20L, 1), (3L, 30L, 0)))
+    h.put(dir, 1L, Seq((1L, 11L, 1)))
+    h.drop(dir, 2L, Seq(2L))
+    h.put(dir, 3L, Seq((2L, 23L, 0)))
+    h.put(dir, 4L, Seq((3L, 34L, 1)))
+    h.drop(dir, 5L, Seq(3L))
+  }
+
+  /** The (id, payload) rows the window reader (row_number over the id
+    * by descending stamp, tombstones anti-joined) resolved for
+    * [[writeHistory]] as of each stamp; the last is also the live view.
+    */
+  private val expectedHistory: Seq[Seq[String]] = Seq(
+    Seq("[1,10]", "[2,20]", "[3,30]"),
+    Seq("[1,11]", "[2,20]", "[3,30]"),
+    Seq("[1,11]", "[3,30]"),
+    Seq("[1,11]", "[2,23]", "[3,30]"),
+    Seq("[1,11]", "[2,23]", "[3,34]"),
+    Seq("[1,11]", "[2,23]"))
+
+  for (h <- histories) {
+    test(s"[${h.name}] history: as-of every stamp and live, row for row (move, delete/re-upsert, upsert/delete)") {
+      val dir = tmp(s"contract_${h.name}h") + "/art"
+      writeHistory(h, dir)
+      expectedHistory.zipWithIndex.foreach { case (want, s) =>
+        assert(h.asOf(dir, s.toLong) == want, s"${h.name}: as-of $s")
+      }
+      assert(h.live(dir) == expectedHistory.last, s"${h.name}: live")
+    }
+  }
+
+  for (h <- histories) {
+    test(s"[${h.name}] rows sharing an (id, stamp) all survive; a tombstone hides them all") {
+      val dir = tmp(s"contract_${h.name}tie") + "/art"
+      h.put(dir, 0L, Seq((1L, 10L, 0), (1L, 11L, 1), (2L, 20L, 0)))
+      h.put(dir, 1L, Seq((2L, 21L, 0), (2L, 22L, 1)))
+      h.drop(dir, 2L, Seq(1L))
+      assert(h.asOf(dir, 1L) == Seq("[1,10]", "[1,11]", "[2,21]", "[2,22]"), h.name)
+      assert(h.live(dir) == Seq("[2,21]", "[2,22]"), h.name)
+    }
+  }
+
+  test("[ivf] null ids: every null-id version is served, no stamp or tombstone hides one") {
+    val dir = tmp("contract_ivfnull") + "/art"
+    Io.writeIvfIndex(
+      Seq((Option.empty[Long], 1L, 0), (None, 2L, 1), (Some(1L), 3L, 0)).toDF("id", "v", "cell"),
+      Seq(Array(0.0, 1.0), Array(1.0, 0.0)),
+      dir)
+    Io.upsertIvfIndex(Seq((Option.empty[Long], 4L, 0)).toDF("id", "v", "cell"), dir, 1L)
+    Io.deleteIvfIds(Seq(1L).toDF("id"), dir, 2L)
+    assert(IvfHistory.live(dir) == Seq("[null,1]", "[null,2]", "[null,4]"))
+  }
+
 }

@@ -3,9 +3,6 @@ package graft
 import graft.model.Models._
 import graft.pipelines.{Orbit, Rag}
 import java.sql.Date
-import org.apache.spark.graftbridge.ListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 
 class OrbitSpec extends SparkSpec {
@@ -90,31 +87,6 @@ class OrbitSpec extends SparkSpec {
     assert(Orbit.payloadLookup(out, "acme").count() == 1)
   }
 
-  /** Runs `body`, counting the SQL executions it starts and the
-    * distinct executions that launched Spark jobs.
-    */
-  private def executions[T](body: => T): (T, Int, Int) = {
-    val sc = spark.sparkContext
-    ListenerBridge.drain(sc)
-    val started = new java.util.concurrent.atomic.AtomicInteger
-    val withJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    val listener = new SparkListener {
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case _: SparkListenerSQLExecutionStart => started.incrementAndGet()
-        case _                                 =>
-      }
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
-          .foreach(withJobs.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      ListenerBridge.drain(sc)
-      (out, started.get, withJobs.size)
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("E1 ragSearchCompany: company filter with fallback-if-empty") {
     val docs = Seq(
       (1L, "acme quarterly spark results", "acme/blog"),
@@ -141,14 +113,14 @@ class OrbitSpec extends SparkSpec {
       (1L, "acme quarterly spark results", "acme/blog"),
       (2L, "unrelated corpus text", "other/site")
     ), 2).toDF("doc_id", "text", "source")
-    val (hit, started, searchRuns) =
-      executions(Orbit.ragSearchCompany(docs, "acme", "spark results", 5, chunkSize = 100))
+    val SparkSpec.Runs(hit, started, searchRuns, _) =
+      runs(Orbit.ragSearchCompany(docs, "acme", "spark results", 5, chunkSize = 100))
     assert(started == 1 && searchRuns == 1)
     // the hit comes back local: collecting it launches no job
-    val (rows, _, jobRuns) = executions(hit.collect())
+    val SparkSpec.Runs(rows, _, jobRuns, _) = runs(hit.collect())
     assert(rows.length == 1 && jobRuns == 0)
     // a fallback pays the empty filtered top-k, then the caller's run
-    val (_, _, fallbackRuns) = executions(
+    val SparkSpec.Runs(_, _, fallbackRuns, _) = runs(
       Orbit.ragSearchCompany(docs, "zcorp", "spark results", 5, chunkSize = 100).collect())
     assert(fallbackRuns == 2)
   }

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.window.WindowExecBase
 import org.apache.spark.sql.functions._
 
 /** Physical-plan shape assertions — the scale guarantees the README
@@ -9,7 +12,7 @@ import org.apache.spark.sql.functions._
   * hash aggregates (no interpreted nested-loop join, no sort
   * aggregate).
   */
-class PlanSpec extends SparkSpec {
+class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val sfDir = "/root/testdata/sf0.001"
 
@@ -269,5 +272,41 @@ class PlanSpec extends SparkSpec {
       spark.sql("DROP TABLE IF EXISTS bkt_orders")
       spark.sql("DROP TABLE IF EXISTS bkt_lineitem")
     }
+  }
+
+  test("served IVF probe: partition-pruned scan, no shuffle or window, one execution per request") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("ivfserve").toString + "/idx"
+    val cents = Seq(Array(1.0, 0.0), Array(0.0, 1.0), Array(-1.0, 0.0), Array(0.0, -1.0))
+    // 40 vectors, 10 per cell, each near its cell's centroid
+    def vec(id: Long, cell: Int) =
+      (id, Seq(cents(cell)(0) + 0.01 * id, cents(cell)(1) + 0.01 * id), cell)
+    graft.sources.Io.writeIvfIndex(
+      (0L until 40L).map(i => vec(i, (i % 4).toInt)).toDF("vec_id", "embedding", "cell"), cents, dir)
+    val query = Array(1.0, 0.05)
+    /** One served request over a freshly opened index, its plan and
+      * runs checked; returns the served ids.
+      */
+    def serve(jobs: Int) = {
+      val (cs, latest) = graft.sources.Io.readIvfIndexLatest(spark, dir, "vec_id")
+      val top = graft.operators.Similarity.ivfTopK(latest, "embedding", cs, query, 20, 1)
+      val r = runs(top.collect())
+      val plan = top.queryExecution.executedPlan
+      val text = plan.toString
+      assert(raw"PartitionFilters: \[isnotnull\(cell#\d+\), \(cell#\d+ = 0\)\]".r.findFirstIn(text).nonEmpty, text)
+      assert(collectWithSubqueries(plan) { case e: ShuffleExchangeLike => e }.isEmpty, text)
+      assert(collectWithSubqueries(plan) { case w: WindowExecBase => w }.isEmpty, text)
+      assert(r.executions == 1 && r.jobs == jobs, s"${r.executions} executions, ${r.jobs} jobs\n$text")
+      r.out.map(_.getAs[Long]("vec_id")).toSeq.sorted
+    }
+    // base only: the anti-join folds away, the request is one scan job
+    assert(serve(jobs = 1) == (0L until 40L by 4L))
+    // id 0 moves to cell 1 (its stale copy stays in the probed cell
+    // 0), id 8 is replaced in place, id 4 is deleted
+    graft.sources.Io.upsertIvfIndex(Seq(vec(0L, 1), vec(8L, 0)).toDF("vec_id", "embedding", "cell"), dir, 1L)
+    graft.sources.Io.deleteIvfIds(Seq(4L).toDF("vec_id"), dir, 2L)
+    // the stale-version bounds broadcast from a local relation, which
+    // Spark collects through a second, one-stage job of the execution
+    assert(serve(jobs = 2) == (8L until 40L by 4L))
   }
 }
