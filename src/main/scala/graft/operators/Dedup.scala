@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.expressions.{SortedHashes64, SortedIntersectSize}
 import graft.functions.TextFns
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
 import org.apache.spark.sql.expressions.Window
@@ -7,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.BinaryType
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.storage.StorageLevel
 
 /** Training-data deduplication family: exact, n-gram Jaccard,
   * MinHash+LSH, SimHash, embedding-cosine near-dup.
@@ -47,8 +49,8 @@ object Dedup {
   def rareLineSurvivors(exploded: DataFrame, lineCol: String, maxDf: Int): DataFrame = {
     // persisted: the count pass and the probe side read ONE
     // segmentation/explode pass (tokenize + slice per doc dominates
-    // this operator) — same caching contract as ngramJaccardPairs
-    val cached = exploded.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // this operator); caching contract: `persisted`
+    val cached = persisted(exploded)
     val rare = cached
       .groupBy(col(lineCol))
       .agg(count(lit(1)).as("__df"))
@@ -81,22 +83,17 @@ object Dedup {
     shingleSets(df, textCol, idCol, n)
       .select(col("id"), explode(col("sh")).as("shingle"))
 
-  /** N-gram Jaccard near-dup pairs: candidate pairs share ≥1 shingle;
-    * jaccard = |A∩B| / (|A|+|B|-|A∩B|) ≥ threshold.
-    *
-    * The shingle join IS the LSH here (bucket = shingle); frequent
-    * shingles can skew — AQE skew-join handles moderate skew, and a
-    * document-frequency cap (`maxDf`) drops degenerate buckets the way
-    * production dedup pipelines drop stop-shingles.
-    *
-    * Caching contract (also `minhashLshPairs`/`simhashNearDupPairs`):
-    * the returned plan reads an internally persisted frame so both
-    * join sides share one upstream pass. The blocks live until the
-    * session clears them — long-lived sessions should
+  /** The caching contract of this object's pair operators, and of the
+    * operators elsewhere that cite it: the returned plan reads an
+    * internally persisted frame, so every join side and every verify
+    * side shares one upstream pass. The blocks live until the session
+    * clears them — long-lived sessions should
     * `spark.catalog.clearCache()` (or unpersist all persistent RDDs)
     * after consuming the result, as the engine's Bench/Profile mains
     * do between queries.
     */
+  private def persisted(df: DataFrame): DataFrame = df.persist(StorageLevel.MEMORY_AND_DISK)
+
   /** Chapman capture–recapture over two detectors' pair sets
     * (Lincoln–Petersen with the +1 bias correction, Chapman 1951) —
     * estimate the TRUE near-dup pair population from how much two
@@ -119,10 +116,8 @@ object Dedup {
     * recall_a_ppm, recall_b_ppm).
     */
   def captureRecapture(pairsA: DataFrame, pairsB: DataFrame): DataFrame = {
-    val a = pairsA.select(col("id_a"), col("id_b")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val b = pairsB.select(col("id_a"), col("id_b")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val a = persisted(pairsA.select(col("id_a"), col("id_b")).distinct())
+    val b = persisted(pairsB.select(col("id_a"), col("id_b")).distinct())
     a.agg(count(lit(1)).as("n_a"))
       .crossJoin(broadcast(b.agg(count(lit(1)).as("n_b"))))
       .crossJoin(broadcast(
@@ -143,8 +138,131 @@ object Dedup {
           .as("recall_b_ppm"))
   }
 
+  // The near-dup pair pipeline. Every pair operator below is the same
+  // three stages, each written once here:
+  //   1. candidates — the full shingle equi-join (`sharedCounts` over
+  //      the df-capped universe), the prefix-filtered shingle join
+  //      (prefixJaccardPairs), or the MinHash band join
+  //      (`bandCandidates`, shared with Similarity's hyperplane LSH);
+  //   2. the exact score — Jaccard or containment from shared-shingle
+  //      counts, or Jaccard from a merge walk over two sorted hash
+  //      sets (`verifyHashSets`);
+  //   3. the threshold (`keepScored`).
+  // The entry points differ only in the candidate generator, the pair
+  // predicate (id_a < id_b for a self-join) and the score.
+
+  /** The df-capped hashed-shingle universe: one (id, shingle, __df)
+    * row per distinct shingle of each non-empty doc, `__df` being the
+    * shingle's corpus document frequency, kept when at most `maxDf`.
+    *
+    * Shingles ride as 64-bit hashes from here on: the equi-join and
+    * the common-count only need equality, and long keys shuffle and
+    * compare far cheaper than shingle strings (collisions ~1e-15 for
+    * the set sizes a pair compares — the standard production
+    * tradeoff). The df-cap drops degenerate stop-shingles from the
+    * WHOLE score universe — both the intersection counts and the set
+    * sizes come from the capped table, so capped shingles don't
+    * deflate the score by inflating only the denominator.
+    * (Measured alternative: groupBy-count + broadcast anti-join of
+    * the over-cap set. ~40% SLOWER here and no better at scale:
+    * shingle keys are mostly unique, so the count agg shuffles as
+    * many rows as this window does, plus an extra kernel pass and a
+    * broadcast barrier. The window's sort is the only extra cost and
+    * one count-over-window needs no frame buffering.)
+    */
+  private def cappedShingles(
+      df: DataFrame,
+      textCol: String,
+      idCol: String,
+      n: Int,
+      maxDf: Int): DataFrame =
+    shingleSets(df, textCol, idCol, n)
+      .filter(size(col("sh")) > 0)
+      .select(col("id"), SortedHashes64.hashes(col("sh")).as("hs"))
+      .select(col("id"), explode(col("hs")).as("shingle"))
+      .withColumn("__df", count(lit(1)).over(Window.partitionBy(col("shingle"))))
+      .filter(col("__df") <= maxDf)
+
+  /** Shared-shingle counts: (id_a, id_b, common, sz_a, sz_b) for every
+    * `a`-side doc and `universe` doc that share a shingle and pass
+    * `pair`, with both set sizes counted in the same universe. The
+    * shingle equi-join IS the LSH here (bucket = shingle); AQE's
+    * skew join handles moderate skew and the df-cap drops the
+    * degenerate buckets.
+    */
+  private def sharedCounts(a: DataFrame, universe: DataFrame, pair: Column): DataFrame = {
+    val sizes = universe.groupBy(col("id")).agg(count(lit(1)).as("sz"))
+    a.select(col("id").as("id_a"), col("shingle"))
+      .join(universe.select(col("id").as("id_b"), col("shingle")), Seq("shingle"))
+      .filter(pair)
+      .groupBy(col("id_a"), col("id_b"))
+      .agg(count(lit(1)).as("common"))
+      .join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
+      .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
+  }
+
+  /** |A∩B| / |A∪B| of two distinct sets from their shared count and
+    * sizes: |A∪B| = |A| + |B| − |A∩B|.
+    */
+  private def jaccard(common: Column, szA: Column, szB: Column): Column =
+    common.cast("double") / (szA + szB - common).cast("double")
+
+  /** The pairs whose `score`, named `name`, is at least `threshold`:
+    * (id_a, id_b, name).
+    */
+  private def keepScored(pairs: DataFrame, name: String, score: Column, threshold: Double): DataFrame =
+    pairs
+      .withColumn(name, score)
+      .filter(col(name) >= threshold)
+      .select(col("id_a"), col("id_b"), col(name))
+
+  /** Exact Jaccard of candidate pairs (id_a, id_b) over the sides'
+    * sorted hash sets ((id, hs) frames): the sets join back per
+    * candidate by id, so the wide arrays never ride the candidate
+    * shuffle, and each pair's work is ONE sorted merge walk over
+    * longs. Returns (id_a, id_b, jaccard ≥ threshold).
+    */
+  private def verifyHashSets(cand: DataFrame, a: DataFrame, b: DataFrame, threshold: Double): DataFrame =
+    keepScored(
+      cand
+        .join(a.select(col("id").as("id_a"), col("hs").as("hs_a")), "id_a")
+        .join(b.select(col("id").as("id_b"), col("hs").as("hs_b")), "id_b")
+        .withColumn("common", SortedIntersectSize.intersectSize(col("hs_a"), col("hs_b"))),
+      "jaccard",
+      jaccard(col("common"), size(col("hs_a")), size(col("hs_b"))),
+      threshold)
+
+  /** The LSH band join: distinct (id_a, id_b) pairs of an `a` row and
+    * a `b` row that agree on ANY band's bucket (the OR-of-ANDs) and
+    * pass `pair`. `buckets` holds one bucket column per band, each
+    * evaluated over both sides (frames with an `id` column); the
+    * bucket shuffle carries only (id, band, bucket), and candidates
+    * dedupe across bands before any verify pulls wide columns back
+    * by id, so each pair is scored once.
+    */
+  private[operators] def bandCandidates(
+      a: DataFrame,
+      b: DataFrame,
+      buckets: Seq[Column],
+      pair: Column): DataFrame = {
+    val bands = array(buckets.zipWithIndex.map { case (bucket, band) =>
+      struct(lit(band).as("band"), bucket.as("bucket"))
+    }: _*)
+    def banded(side: DataFrame, id: String): DataFrame =
+      side
+        .select(col("id"), explode(bands).as("bb"))
+        .select(col("id").as(id), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
+    banded(a, "id_a")
+      .join(banded(b, "id_b"), Seq("band", "bucket"))
+      .filter(pair)
+      .select(col("id_a"), col("id_b"))
+      .dropDuplicates("id_a", "id_b")
+  }
+
   /** Exact n-gram Jaccard pair discovery via the df-capped shingle
-    * equi-join (bucketed, never all-pairs).
+    * equi-join (bucketed, never all-pairs): candidate pairs share ≥1
+    * capped shingle; jaccard = |A∩B| / (|A|+|B|-|A∩B|) ≥ threshold.
+    * Caching contract: `persisted`.
     *
     * Deployment knob (the SCALE_r10 partition-sweep lesson): the
     * shingle equi-join is this pipeline's dominant shuffle, and its
@@ -163,109 +281,42 @@ object Dedup {
       n: Int,
       threshold: Double,
       maxDf: Int = 1000): DataFrame = {
-    // shingles ride as 64-bit hashes from here on: the equi-join and
-    // the common-count only need equality, and long keys shuffle and
-    // compare far cheaper than shingle strings (collisions ~1e-15 for
-    // the set sizes a pair compares — the standard production tradeoff)
-    val sets = shingleSets(df, textCol, idCol, n)
-      .filter(size(col("sh")) > 0)
-      .select(
-        col("id"),
-        graft.expressions.SortedHashes64.hashes(col("sh")).as("hs"))
-    val sh = sets.select(col("id"), explode(col("hs")).as("shingle"))
-    // the df-cap drops degenerate stop-shingles from the WHOLE jaccard
-    // universe — both the intersection counts and the set sizes below
-    // come from the capped table, so capped shingles don't deflate the
-    // score by inflating only the denominator.
-    // (Measured alternative: groupBy-count + broadcast anti-join of
-    // the over-cap set. ~40% SLOWER here and no better at scale:
-    // shingle keys are mostly unique, so the count agg shuffles as
-    // many rows as this window does, plus an extra kernel pass and a
-    // broadcast barrier. The window's sort is the only extra cost and
-    // one count-over-window needs no frame buffering.)
-    val filtered = sh
-      .withColumn("__df", count(lit(1)).over(Window.partitionBy(col("shingle"))))
-      .filter(col("__df") <= maxDf)
-      .drop("__df")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sizes = filtered.groupBy(col("id")).agg(count(lit(1)).as("sz"))
-    val a = filtered.select(col("id").as("id_a"), col("shingle"))
-    val b = filtered.select(col("id").as("id_b"), col("shingle"))
-    val common = a
-      .join(b, Seq("shingle"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("common"))
-    common
-      .join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
-      .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
-      .withColumn(
-        "jaccard",
-        col("common").cast("double") /
-          (col("sz_a") + col("sz_b") - col("common")).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+    val universe = persisted(cappedShingles(df, textCol, idCol, n, maxDf).drop("__df"))
+    keepScored(
+      sharedCounts(universe, universe, col("id_a") < col("id_b")),
+      "jaccard",
+      jaccard(col("common"), col("sz_a"), col("sz_b")),
+      threshold)
   }
 
-  /** One-row broadcast guard for the canary twin-id range: the plan
-    * FAILS FAST (assert_true) if any real id reaches `twinOffset`,
-    * because a twin id colliding with a real doc id would silently
-    * corrupt the unioned corpus's shingle sets and the reported
-    * recall — the class of bug that never throws and always skews.
-    * Empty input passes (no ids, no collision). One column-pruned
-    * max() over the id column, broadcast back onto the corpus and
-    * asserted via the filter(assert_true(...).isNull) idiom
-    * ([[Similarity]]'s dimension check) — a bare projected guard
-    * column would be column-pruned away and never evaluate.
-    */
-  private def withTwinGuard(
-      corpus: DataFrame,
-      df: DataFrame,
-      idCol: String,
-      twinOffset: Long): DataFrame =
-    corpus
-      .crossJoin(broadcast(df.agg(max(col(idCol)).cast("long").as("__max_id"))))
-      .filter(
-        assert_true(
-          coalesce(col("__max_id") < lit(twinOffset), lit(true)),
-          concat(
-            lit(s"canary twinOffset $twinOffset must exceed max($idCol) = "),
-            col("__max_id").cast("string"))).isNull)
-      .drop("__max_id")
-
-  /** Measurement-in-production for the near-dup detector: plant
-    * deterministic paraphrase twins (every `plantEvery`-th doc with
-    * ≥ 10 tokens, ~10% token dropout keyed by the portable hash32 of
-    * (doc_id, position) — no RNG state), run the REAL jaccard
-    * detector over corpus ∪ twins, and report how many planted
-    * pairs it recovered — the canary that catches a recall
-    * regression (threshold drift, a broken shingle kernel, an
-    * over-aggressive df-cap) in the same pipeline run that does the
-    * work. Returns one row (n_planted, n_found, recall_ppm exact
-    * integer). The dropout is map-only; the detector pays its normal
-    * cost over a corpus ~1/plantEvery larger.
+  /** Plant the canary's deterministic paraphrase twins: every
+    * `plantEvery`-th doc with ≥ 10 tokens, ~10% token dropout keyed
+    * by the portable hash32 of (doc_id, position) — no RNG state.
+    * Returns (corpus ∪ twins as (idCol, textCol), the planted pairs
+    * as (id_a = doc, id_b = twin)).
     *
     * Twin ids are real id + `twinOffset`; a collision with a real
-    * doc id would corrupt the unioned corpus's shingle sets and
-    * silently skew recall_ppm, so the plan carries a guard that
-    * FAILS FAST (assert_true over a broadcast one-row max(id) — the
-    * documented bounded-BNLJ class) whenever max(id) ≥ twinOffset.
-    * On a corpus with ids ≥ the default 1e6, pass a larger
-    * twinOffset instead of disabling the guard.
+    * doc id would silently corrupt the unioned corpus's shingle sets
+    * and the reported recall — the class of bug that never throws
+    * and always skews. So the corpus carries a guard that FAILS FAST
+    * whenever max(id) ≥ twinOffset (empty input passes): one
+    * column-pruned max() over the id column, broadcast back onto the
+    * corpus (the documented bounded-BNLJ class) and asserted via the
+    * filter(assert_true(...).isNull) idiom ([[Similarity]]'s
+    * dimension check) — a bare projected guard column would be
+    * column-pruned away and never evaluate. On a corpus with ids ≥
+    * the default 1e6, pass a larger twinOffset instead of disabling
+    * the guard.
     */
-  def canaryRecall(
+  private def plantTwins(
       df: DataFrame,
       textCol: String,
       idCol: String,
-      n: Int,
-      threshold: Double,
-      plantEvery: Int = 10,
-      twinOffset: Long = 1000000L): DataFrame = {
-    require(plantEvery >= 2, "plantEvery must be >= 2")
+      plantEvery: Int,
+      twinOffset: Long): (DataFrame, DataFrame) = {
     require(twinOffset > 0L, "twinOffset must be positive")
     val toks = TextFns.tokens(col(textCol))
-    val planted = df
-      .filter(col(idCol) % plantEvery === 0 && size(toks) >= 10)
+    val planted = df.filter(col(idCol) % plantEvery === 0 && size(toks) >= 10)
     val dropped = filter(
       transform(
         toks,
@@ -285,12 +336,43 @@ object Dedup {
       .select(
         (col(idCol) + twinOffset).as(idCol),
         array_join(col("__dropped"), " ").as(textCol))
-    val corpus = withTwinGuard(
-      df.select(col(idCol), col(textCol)).unionByName(twins),
-      df, idCol, twinOffset)
+    val corpus = df
+      .select(col(idCol), col(textCol))
+      .unionByName(twins)
+      .crossJoin(broadcast(df.agg(max(col(idCol)).cast("long").as("__max_id"))))
+      .filter(
+        assert_true(
+          coalesce(col("__max_id") < lit(twinOffset), lit(true)),
+          concat(
+            lit(s"canary twinOffset $twinOffset must exceed max($idCol) = "),
+            col("__max_id").cast("string"))).isNull)
+      .drop("__max_id")
     val expected = planted.select(
       col(idCol).as("id_a"),
       (col(idCol) + twinOffset).as("id_b"))
+    (corpus, expected)
+  }
+
+  /** Measurement-in-production for the near-dup detector: plant
+    * twins ([[plantTwins]]), run the REAL jaccard detector over
+    * corpus ∪ twins, and report how many planted pairs it
+    * recovered — the canary that catches a recall regression
+    * (threshold drift, a broken shingle kernel, an over-aggressive
+    * df-cap) in the same pipeline run that does the work. Returns
+    * one row (n_planted, n_found, recall_ppm exact integer). The
+    * dropout is map-only; the detector pays its normal cost over a
+    * corpus ~1/plantEvery larger.
+    */
+  def canaryRecall(
+      df: DataFrame,
+      textCol: String,
+      idCol: String,
+      n: Int,
+      threshold: Double,
+      plantEvery: Int = 10,
+      twinOffset: Long = 1000000L): DataFrame = {
+    require(plantEvery >= 2, "plantEvery must be >= 2")
+    val (corpus, expected) = plantTwins(df, textCol, idCol, plantEvery, twinOffset)
     val found = ngramJaccardPairs(corpus, textCol, idCol, n, threshold)
       .join(expected, Seq("id_a", "id_b"), "left_semi")
     expected
@@ -321,35 +403,10 @@ object Dedup {
       plantEvery: Int = 10,
       twinOffset: Long = 1000000L): DataFrame = {
     require(thresholds.nonEmpty && thresholds.forall(t => t >= 1 && t <= 100))
-    require(twinOffset > 0L, "twinOffset must be positive")
-    val toks = TextFns.tokens(col(textCol))
-    val planted = df.filter(col(idCol) % plantEvery === 0 && size(toks) >= 10)
-    val dropped = filter(
-      transform(
-        toks,
-        (t, i) =>
-          when(
-            graft.operators.Sampling
-              .hash32(concat(col(idCol), lit(":"), i)) % 10 =!= 0,
-            t).otherwise(lit(null))),
-      x => x.isNotNull)
-    // lateral-alias trap as in canaryRecall: dropout evaluates
-    // against the ORIGINAL id via withColumn, never the +1e6 alias
-    val twins = planted
-      .withColumn("__dropped", dropped)
-      .select(
-        (col(idCol) + twinOffset).as(idCol),
-        array_join(col("__dropped"), " ").as(textCol))
-    val corpus = withTwinGuard(
-      df.select(col(idCol), col(textCol)).unionByName(twins),
-      df, idCol, twinOffset)
-    val scored = explainJaccardPairs(
-      corpus, textCol, idCol, n, thresholds.min / 100.0)
-      .select(col("id_a"), col("id_b"), col("jac6"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val expected = planted.select(
-      col(idCol).as("id_a"),
-      (col(idCol) + twinOffset).as("id_b"))
+    val (corpus, expected) = plantTwins(df, textCol, idCol, plantEvery, twinOffset)
+    val scored = persisted(
+      explainJaccardPairs(corpus, textCol, idCol, n, thresholds.min / 100.0)
+        .select(col("id_a"), col("id_b"), col("jac6")))
     val nPlanted = broadcast(expected.agg(count(lit(1)).as("n_planted")))
     val ts = thresholds.sorted.map(t => lit(t.toLong))
     val sweep = scored.sparkSession
@@ -396,29 +453,9 @@ object Dedup {
       n: Int,
       threshold: Double,
       maxDf: Int = 1000): DataFrame = {
-    val sets = shingleSets(df, textCol, idCol, n)
-      .filter(size(col("sh")) > 0)
-      .select(
-        col("id"),
-        graft.expressions.SortedHashes64.hashes(col("sh")).as("hs"))
-    val sh = sets.select(col("id"), explode(col("hs")).as("shingle"))
-    val filtered = sh
-      .withColumn("__df", count(lit(1)).over(Window.partitionBy(col("shingle"))))
-      .filter(col("__df") <= maxDf)
-      .drop("__df")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sizes = filtered.groupBy(col("id")).agg(count(lit(1)).as("sz"))
-    val a = filtered.select(col("id").as("id_a"), col("shingle"))
-    val b = filtered.select(col("id").as("id_b"), col("shingle"))
-    a.join(b, Seq("shingle"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("common"))
-      .join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
-      .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
-      .filter(
-        col("common").cast("double") /
-          (col("sz_a") + col("sz_b") - col("common")).cast("double") >= threshold)
+    val universe = persisted(cappedShingles(df, textCol, idCol, n, maxDf).drop("__df"))
+    sharedCounts(universe, universe, col("id_a") < col("id_b"))
+      .filter(jaccard(col("common"), col("sz_a"), col("sz_b")) >= threshold)
       .select(
         col("id_a"),
         col("id_b"),
@@ -451,11 +488,10 @@ object Dedup {
     * pair is re-scored exactly, so the prefix stage changes WHO gets
     * compared, never what a comparison sees.
     *
-    * Same caching contract as [[ngramJaccardPairs]] — and the same
-    * deployment knob: the prefix-token equi-join shuffle wants
+    * Caching contract: `persisted`. Same deployment knob as
+    * [[ngramJaccardPairs]]: the prefix-token equi-join shuffle wants
     * `spark.sql.shuffle.partitions` ∝ input (AQE coalesces the
-    * over-provisioned small runs); see the [[ngramJaccardPairs]]
-    * scaladoc for the measured rule.
+    * over-provisioned small runs).
     */
   def prefixJaccardPairs(
       df: DataFrame,
@@ -465,18 +501,8 @@ object Dedup {
       threshold: Double,
       maxDf: Int = 1000): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, "threshold must be in (0, 1]")
-    val sets = shingleSets(df, textCol, idCol, n)
-      .filter(size(col("sh")) > 0)
-      .select(
-        col("id"),
-        graft.expressions.SortedHashes64.hashes(col("sh")).as("hs"))
-    val sh = sets.select(col("id"), explode(col("hs")).as("shingle"))
-    // identical df-capped universe to ngramJaccardPairs; __df is kept
-    // past the cap because it IS the global token order below
-    val filtered = sh
-      .withColumn("__df", count(lit(1)).over(Window.partitionBy(col("shingle"))))
-      .filter(col("__df") <= maxDf)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // __df is kept past the cap because it IS the global token order below
+    val filtered = persisted(cappedShingles(df, textCol, idCol, n, maxDf))
     // per-doc CAPPED shingle sets as sorted hash arrays: set sizes
     // come from array length, and verification is one merge-walk
     // kernel per candidate pair (the minhash-verify shape) — a
@@ -486,10 +512,10 @@ object Dedup {
     // vs 2.4 s); shipping two bounded arrays to each of the FEW
     // post-prefix candidates is exactly what the prefix filter
     // bought us
-    val cappedSets = filtered
-      .groupBy(col("id"))
-      .agg(sort_array(collect_list(col("shingle"))).as("hs"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cappedSets = persisted(
+      filtered
+        .groupBy(col("id"))
+        .agg(sort_array(collect_list(col("shingle"))).as("hs")))
     // rarest-first total order: (df, hash). row_number is a per-doc
     // window — bounded by one document's shingle count, never a
     // corpus-wide sort
@@ -520,18 +546,7 @@ object Dedup {
           col("sz_a").cast("double") >= col("sz_b").cast("double") * threshold - 1e-9)
       .select(col("id_a"), col("id_b"))
       .distinct()
-    cand
-      .join(cappedSets.select(col("id").as("id_a"), col("hs").as("hs_a")), "id_a")
-      .join(cappedSets.select(col("id").as("id_b"), col("hs").as("hs_b")), "id_b")
-      .withColumn(
-        "common",
-        graft.expressions.SortedIntersectSize.intersectSize(col("hs_a"), col("hs_b")))
-      .withColumn(
-        "jaccard",
-        col("common").cast("double") /
-          (size(col("hs_a")) + size(col("hs_b")) - col("common")).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+    verifyHashSets(cand, cappedSets, cappedSets, threshold)
   }
 
   /** Two-table exact Jaccard — [[ngramJaccardPairs]] for the
@@ -550,7 +565,7 @@ object Dedup {
     * frequency is a global property; at 100 TB persist the df table
     * as its own artifact and join it in rather than recomputing —
     * the cap must see the whole corpus either way, or batch-vs-full
-    * scores diverge). Same caching contract as the single-table form.
+    * scores diverge). Caching contract: `persisted`.
     */
   def ngramJaccardAgainst(
       batch: DataFrame,
@@ -570,35 +585,14 @@ object Dedup {
     val docs = Relational
       .dedupeFirstWins(tagged, Seq(col("id")), Seq(col("__pri").desc))
       .drop("__pri")
-    val sh = shingleSets(docs, "__txt", "id", n)
-      .filter(size(col("sh")) > 0)
-      .select(
-        col("id"),
-        explode(graft.expressions.SortedHashes64.hashes(col("sh"))).as("shingle"))
-    val filtered = sh
-      .withColumn("__df", count(lit(1)).over(Window.partitionBy(col("shingle"))))
-      .filter(col("__df") <= maxDf)
-      .drop("__df")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sizes = filtered.groupBy(col("id")).agg(count(lit(1)).as("sz"))
+    val universe = persisted(cappedShingles(docs, "__txt", "id", n, maxDf).drop("__df"))
     val batchIds = batch.select(col(idCol).as("id")).distinct()
-    val a = filtered
-      .join(batchIds, Seq("id"), "left_semi")
-      .select(col("id").as("id_a"), col("shingle"))
-    val b = filtered.select(col("id").as("id_b"), col("shingle"))
-    val common = a
-      .join(b, Seq("shingle"))
-      .filter(col("id_a") =!= col("id_b"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("common"))
-    common
-      .join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
-      .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
-      .withColumn(
-        "jaccard",
-        col("common").cast("double") /
-          (col("sz_a") + col("sz_b") - col("common")).cast("double"))
-      .filter(col("jaccard") >= threshold)
+    keepScored(
+      sharedCounts(
+        universe.join(batchIds, Seq("id"), "left_semi"), universe, col("id_a") =!= col("id_b")),
+      "jaccard",
+      jaccard(col("common"), col("sz_a"), col("sz_b")),
+      threshold)
       // batch-batch pairs surface in both orientations with the same
       // integers, hence bit-identical scores — canonicalize + distinct
       .select(
@@ -617,9 +611,9 @@ object Dedup {
     * axis production dedup runs next to Jaccard (Broder's
     * resemblance/containment pairing).
     *
-    * Same scale shape, df-cap and caching contract as
-    * [[ngramJaccardPairs]] — the candidate stage is the identical
-    * shingle equi-join, only the verify score differs. Returns
+    * Same scale shape and df-cap as [[ngramJaccardPairs]] (caching
+    * contract: `persisted`) — the candidate stage is the identical
+    * shingle equi-join, only the score differs. Returns
     * (id_a, id_b, containment).
     */
   def containmentPairs(
@@ -629,31 +623,12 @@ object Dedup {
       n: Int,
       threshold: Double,
       maxDf: Int = 1000): DataFrame = {
-    val sets = shingleSets(df, textCol, idCol, n)
-      .filter(size(col("sh")) > 0)
-      .select(
-        col("id"),
-        graft.expressions.SortedHashes64.hashes(col("sh")).as("hs"))
-    val sh = sets.select(col("id"), explode(col("hs")).as("shingle"))
-    val filtered = sh
-      .withColumn("__df", count(lit(1)).over(Window.partitionBy(col("shingle"))))
-      .filter(col("__df") <= maxDf)
-      .drop("__df")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sizes = filtered.groupBy(col("id")).agg(count(lit(1)).as("sz"))
-    val a = filtered.select(col("id").as("id_a"), col("shingle"))
-    val b = filtered.select(col("id").as("id_b"), col("shingle"))
-    a.join(b, Seq("shingle"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("common"))
-      .join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
-      .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
-      .withColumn(
-        "containment",
-        col("common").cast("double") / least(col("sz_a"), col("sz_b")).cast("double"))
-      .filter(col("containment") >= threshold)
-      .select(col("id_a"), col("id_b"), col("containment"))
+    val universe = persisted(cappedShingles(df, textCol, idCol, n, maxDf).drop("__df"))
+    keepScored(
+      sharedCounts(universe, universe, col("id_a") < col("id_b")),
+      "containment",
+      col("common").cast("double") / least(col("sz_a"), col("sz_b")).cast("double"),
+      threshold)
   }
 
   /** The `numHashes` per-shingle hash expressions behind the MinHash
@@ -673,15 +648,19 @@ object Dedup {
       conv(substring(bases(i / 4), (i % 4) * 8 + 1, 8), 16, 10).cast("long"))
   }
 
-  /** MinHash signatures as a table: (id, s0..s{k-1}) where
-    * s_i = min over the doc's shingle set of the i-th `minhashExprs`
-    * slice — computed as explode -> codegen'd hash-agg (one shuffle on
-    * id), k min-aggregates in a single pass.
+  /** One bucket column per MinHash band over a `sig` array column.
+    * For bandSize 1 the signature value ITSELF is the bucket
+    * (injective — exactly the candidate structure an md5 of it would
+    * give, minus the hash work and with an 8-byte instead of 32-char
+    * shuffle key); wider bands hash the band tuple to one md5 string.
     */
-  def minhashSignatures(sh: DataFrame, numHashes: Int): DataFrame = {
-    val hs = minhashExprs(col("shingle"), numHashes)
-    val aggs = hs.zipWithIndex.map { case (h, i) => min(h).as(s"s$i") }
-    sh.groupBy(col("id")).agg(aggs.head, aggs.tail: _*)
+  private def minhashBuckets(numHashes: Int, bandSize: Int): Seq[Column] = {
+    require(numHashes % bandSize == 0, "numHashes must be divisible by bandSize")
+    (0 until numHashes / bandSize).map { b =>
+      val vals = (0 until bandSize).map(k => element_at(col("sig"), b * bandSize + k + 1))
+      if (bandSize == 1) vals.head
+      else md5(concat_ws("|", vals.map(_.cast("string")): _*))
+    }
   }
 
   /** MinHash+LSH candidate pairs: band the signature (`bandSize` rows
@@ -690,12 +669,13 @@ object Dedup {
     *
     * Plan shape: ONE narrow pass computes each doc's shingle set and
     * k-min signature (`WordShingles` + `MinHashSignature`, per-doc
-    * evals — no shingle rows ever ride a shuffle) -> project (id,
-    * band, bucket) -> one shuffle on the bucket key -> pair join
-    * inside buckets -> verify join. The band shuffle carries only
-    * (id, band, bucket); shingle sets are joined back per candidate
-    * pair, so the wide arrays never ride through the bucket shuffle
-    * (matters at 100 TB).
+    * evals — no shingle rows ever ride a shuffle), persisted for the
+    * band join and the verify (caching contract: `persisted`) ->
+    * project (id, band, bucket) -> one shuffle on the bucket key ->
+    * pair join inside buckets -> verify join. The band shuffle
+    * carries only (id, band, bucket); shingle sets are joined back
+    * per candidate pair, so the wide arrays never ride through the
+    * bucket shuffle (matters at 100 TB).
     */
   def minhashLshPairs(
       df: DataFrame,
@@ -705,38 +685,47 @@ object Dedup {
       numHashes: Int,
       bandSize: Int,
       threshold: Double): DataFrame = {
-    require(numHashes % bandSize == 0, "numHashes must be divisible by bandSize")
-    val numBands = numHashes / bandSize
-    val sigSets = minhashSigSets(df, textCol, idCol, n, numHashes)
-    val banded = bandTable(sigSets, numBands, bandSize)
-    val cand = banded
-      .select(col("id").as("id_a"), col("band"), col("bucket"))
-      .join(banded.select(col("id").as("id_b"), col("band"), col("bucket")), Seq("band", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .dropDuplicates("id_a", "id_b")
-    val shSets = sigSets.select(col("id"), col("hs"))
-    cand
-      .join(shSets.select(col("id").as("id_a"), col("hs").as("hs_a")), "id_a")
-      .join(shSets.select(col("id").as("id_b"), col("hs").as("hs_b")), "id_b")
-      // |A∪B| = |A|+|B|−|A∩B| (hash sets are distinct per doc); the
-      // per-pair work is ONE sorted merge walk over longs
-      .withColumn(
-        "common",
-        graft.expressions.SortedIntersectSize.intersectSize(col("hs_a"), col("hs_b")))
-      .withColumn(
-        "jaccard",
-        col("common").cast("double") /
-          (size(col("hs_a")) + size(col("hs_b")) - col("common")).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+    val buckets = minhashBuckets(numHashes, bandSize)
+    val sigs = persisted(minhashSign(df, textCol, idCol, n, numHashes))
+    verifyHashSets(
+      bandCandidates(sigs, sigs, buckets, col("id_a") < col("id_b")), sigs, sigs, threshold)
   }
 
-  /** One persisted pass per corpus: (id, sig, hs) — MinHash signature
-    * for banding plus the sorted 64-bit shingle hashes verification
-    * merge-walks over. Same caching contract as ngramJaccardPairs.
+  /** Cross-corpus MinHash near-dup matches: batch docs whose Jaccard
+    * vs ANY history doc clears `threshold` — the incremental-ingest
+    * analog of [[minhashLshPairs]] (T1's `dd_incremental` is the
+    * exact-fingerprint version of the same daily shape): the history
+    * is signed in-line, persisted for the band join and the verify,
+    * and matched by [[minhashLshAgainstSigs]]. Returns
+    * (id_a = batch id, id_b = history id, jaccard).
     */
-  private def minhashSigSets(
+  def minhashLshAgainst(
+      batch: DataFrame,
+      history: DataFrame,
+      textCol: String,
+      idCol: String,
+      n: Int,
+      numHashes: Int,
+      bandSize: Int,
+      threshold: Double): DataFrame =
+    minhashLshAgainstSigs(
+      batch, persisted(minhashSign(history, textCol, idCol, n, numHashes)),
+      textCol, idCol, n, numHashes, bandSize, threshold)
+
+  /** Sign a corpus: (id, sig, hs) — the MinHash signature array for
+    * banding plus the sorted 64-bit shingle hashes that exact
+    * verification merge-walks over (collisions ~1e-15 at pair scale —
+    * the standard production tradeoff). ONE shingle pass; once
+    * written as the signature artifact
+    * ([[graft.sources.Io.writeMinhashSigs]]), no consumer re-reads
+    * the corpus text for near-dup work. The pair pipelines sign with
+    * this same plan, so artifact-scored results equal in-line results
+    * exactly. Returns an unpersisted plan: a single write runs it
+    * once, and an equal plan persisted by a pair pipeline (a batch
+    * matched by [[minhashLshAgainstSigs]] before it is signed) is
+    * read from that cache.
+    */
+  def minhashSign(
       df: DataFrame,
       textCol: String,
       idCol: String,
@@ -747,106 +736,19 @@ object Dedup {
       .select(
         col("id"),
         graft.expressions.MinHashSignature.signature(col("sh"), numHashes).as("sig"),
-        // shingle sets as sorted 64-bit hashes: verification is a
-        // merge walk on longs, not string-set intersection (collisions
-        // ~1e-15 at pair scale — the standard production tradeoff)
-        graft.expressions.SortedHashes64.hashes(col("sh")).as("hs"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-  /** (id, band, bucket) rows from a signature table. Bucket key per
-    * band: for bandSize 1 the signature value ITSELF is the bucket
-    * (injective — exactly the candidate structure an md5 of it would
-    * give, minus the hash work and with an 8-byte instead of 32-char
-    * shuffle key); wider bands hash the band tuple to one md5 string.
-    */
-  private def bandTable(sigSets: DataFrame, numBands: Int, bandSize: Int): DataFrame = {
-    val bucketCols = (0 until numBands).map { b =>
-      val vals = (0 until bandSize).map(k => element_at(col("sig"), b * bandSize + k + 1))
-      val bucket =
-        if (bandSize == 1) vals.head
-        else md5(concat_ws("|", vals.map(_.cast("string")): _*))
-      struct(lit(b).as("band"), bucket.as("bucket"))
-    }
-    sigSets
-      .select(col("id"), explode(array(bucketCols: _*)).as("bb"))
-      .select(col("id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-  }
-
-  /** Cross-corpus MinHash near-dup matches: batch docs whose Jaccard
-    * vs ANY history doc clears `threshold` — the incremental-ingest
-    * analog of [[minhashLshPairs]] (T1's `dd_incremental` is the
-    * exact-fingerprint version of the same daily shape). Returns
-    * (id_a = batch id, id_b = history id, jaccard).
-    *
-    * Scale posture: both sides project to (id, band, bucket) before
-    * the bucket equi-join, so shingle arrays never ride the band
-    * shuffle; candidates dedupe before the verify join pulls hash
-    * sets back by id. In a real daily pipeline the history side's
-    * signature table is computed ONCE and persisted/stored — only the
-    * (small) batch side is signed per run, so per-day cost is linear
-    * in the batch, not the corpus.
-    */
-  def minhashLshAgainst(
-      batch: DataFrame,
-      history: DataFrame,
-      textCol: String,
-      idCol: String,
-      n: Int,
-      numHashes: Int,
-      bandSize: Int,
-      threshold: Double): DataFrame = {
-    require(numHashes % bandSize == 0, "numHashes must be divisible by bandSize")
-    val numBands = numHashes / bandSize
-    val bSig = minhashSigSets(batch, textCol, idCol, n, numHashes)
-    val hSig = minhashSigSets(history, textCol, idCol, n, numHashes)
-    val cand = bandTable(bSig, numBands, bandSize)
-      .select(col("id").as("id_a"), col("band"), col("bucket"))
-      .join(
-        bandTable(hSig, numBands, bandSize)
-          .select(col("id").as("id_b"), col("band"), col("bucket")),
-        Seq("band", "bucket"))
-      .select(col("id_a"), col("id_b"))
-      .dropDuplicates("id_a", "id_b")
-    cand
-      .join(bSig.select(col("id").as("id_a"), col("hs").as("hs_a")), "id_a")
-      .join(hSig.select(col("id").as("id_b"), col("hs").as("hs_b")), "id_b")
-      .withColumn(
-        "common",
-        graft.expressions.SortedIntersectSize.intersectSize(col("hs_a"), col("hs_b")))
-      .withColumn(
-        "jaccard",
-        col("common").cast("double") /
-          (size(col("hs_a")) + size(col("hs_b")) - col("common")).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-  }
-
-  /** Sign a corpus for the persisted signature artifact
-    * ([[graft.sources.Io.writeMinhashSigs]]): (id, sig, hs) — the
-    * MinHash signature array for banding plus the sorted 64-bit
-    * shingle hashes that exact verification merge-walks over. ONE
-    * shingle pass; after this lands as an artifact, no consumer ever
-    * re-reads the corpus text for near-dup work. Same kernel as the
-    * in-line pair pipelines, so artifact-scored results equal
-    * in-line results exactly.
-    */
-  def minhashSign(
-      df: DataFrame,
-      textCol: String,
-      idCol: String,
-      n: Int,
-      numHashes: Int): DataFrame =
-    minhashSigSets(df, textCol, idCol, n, numHashes)
+        SortedHashes64.hashes(col("sh")).as("hs"))
 
   /** [[minhashLshAgainst]] with the HISTORY side already signed — the
     * daily-ingest shape the signature artifact exists for: `histSigs`
     * is [[graft.sources.Io.readMinhashSigsLatest]] (or an as-of
-    * read), the batch signs itself per run, and both the band
-    * candidate join and the hash-set verification read ONLY
+    * read), the batch signs itself per run (persisted for the band
+    * join and the verify; caching contract: `persisted`), and both
+    * the band candidate join and the hash-set verification read ONLY
     * signatures — history text never loads, never shuffles, never
-    * re-shingles. Result is IDENTICAL to [[minhashLshAgainst]] over
-    * the texts the artifact was signed from (same kernels, same
-    * hashes). Returns (id_a = batch id, id_b = history id, jaccard).
+    * re-shingles, and per-day cost is linear in the batch, not the
+    * corpus. Result is IDENTICAL to [[minhashLshAgainst]] over the
+    * texts the artifact was signed from (same kernels, same hashes).
+    * Returns (id_a = batch id, id_b = history id, jaccard).
     */
   def minhashLshAgainstSigs(
       batch: DataFrame,
@@ -857,30 +759,10 @@ object Dedup {
       numHashes: Int,
       bandSize: Int,
       threshold: Double): DataFrame = {
-    require(numHashes % bandSize == 0, "numHashes must be divisible by bandSize")
-    val numBands = numHashes / bandSize
-    val bSig = minhashSigSets(batch, textCol, idCol, n, numHashes)
+    val buckets = minhashBuckets(numHashes, bandSize)
+    val bSig = persisted(minhashSign(batch, textCol, idCol, n, numHashes))
     val hSig = histSigs.select(col("id"), col("sig"), col("hs"))
-    val cand = bandTable(bSig, numBands, bandSize)
-      .select(col("id").as("id_a"), col("band"), col("bucket"))
-      .join(
-        bandTable(hSig, numBands, bandSize)
-          .select(col("id").as("id_b"), col("band"), col("bucket")),
-        Seq("band", "bucket"))
-      .select(col("id_a"), col("id_b"))
-      .dropDuplicates("id_a", "id_b")
-    cand
-      .join(bSig.select(col("id").as("id_a"), col("hs").as("hs_a")), "id_a")
-      .join(hSig.select(col("id").as("id_b"), col("hs").as("hs_b")), "id_b")
-      .withColumn(
-        "common",
-        graft.expressions.SortedIntersectSize.intersectSize(col("hs_a"), col("hs_b")))
-      .withColumn(
-        "jaccard",
-        col("common").cast("double") /
-          (size(col("hs_a")) + size(col("hs_b")) - col("common")).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+    verifyHashSets(bandCandidates(bSig, hSig, buckets, lit(true)), bSig, hSig, threshold)
   }
 
   /** Incremental exact dedup with a Bloom prefilter — T1's daily-ingest
@@ -906,9 +788,8 @@ object Dedup {
     *      broadcast only increment-bounded sets.
     * Result is exact (false positives only route rows into step 3,
     * never change the outcome). Assumes the daily increment ≪ history,
-    * which is what makes the two broadcasts safe. Caching contract of
-    * [[ngramJaccardPairs]] applies (probed batch persisted once for
-    * the route split).
+    * which is what makes the two broadcasts safe. Caching contract:
+    * `persisted` (probed batch persisted once for the route split).
     */
   def bloomIncremental(
       batch: DataFrame,
@@ -1415,8 +1296,8 @@ object Dedup {
         col("id"))
       .withColumn("norm", VectorFns.norm2(col("emb")))
       .withColumn("__k", lit(0))
-      // both sides of the self-join read one scan/norm pass (same
-      // caching contract as ngramJaccardPairs)
+      // both sides of the self-join read one scan/norm pass (caching
+      // contract: `persisted`)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val a = base.select(
       col("__k"), col("id").as("id_a"), col("emb").as("emb_a"), col("norm").as("norm_a"))
@@ -1455,7 +1336,7 @@ object Dedup {
     * repeats, the case the window-cap shape funnels into one task
     * (ngramJaccardPairs' measured window argument holds for
     * mostly-unique shingles, not here). The fp table is persisted once
-    * for both join sides (clearCache contract).
+    * for both join sides (caching contract: `persisted`).
     * Returns (id_a, id_b, shared_fps).
     */
   def winnowSpanPairs(

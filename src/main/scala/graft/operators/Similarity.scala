@@ -307,13 +307,14 @@ object Similarity {
     * 1 - (1 - p^r)^b, tunable to ≥0.99 while random pairs stay
     * filtered by the r-bit AND (measured floor in AnnRecallSpec).
     *
-    * Plan shape (100 TB posture, mirrors `Dedup.minhashLshPairs`): one
-    * persisted pass computes (id, emb, norm, signature); the band
-    * explode and bucket self-join carry only (id, band, bucket) — the
-    * embedding arrays never ride the bucket shuffle `bands` times;
-    * candidate pairs are dedup'd across bands BEFORE the verify join
-    * pulls embeddings back by id, so each surviving pair is scored
-    * exactly once.
+    * Plan shape (100 TB posture: the band join of
+    * `Dedup.minhashLshPairs`, `Dedup.bandCandidates`, over hyperplane
+    * buckets): one persisted pass computes (id, emb, norm, signature); the band explode and
+    * bucket self-join carry only (id, band, bucket) — the embedding
+    * arrays never ride the bucket shuffle `bands` times; candidate
+    * pairs are dedup'd across bands BEFORE the verify join pulls
+    * embeddings back by id, so each surviving pair is scored exactly
+    * once.
     */
   def bandedLshNearDupPairs(
       df: DataFrame,
@@ -327,25 +328,14 @@ object Similarity {
     require(bands > 0 && bitsPerBand > 0, "bands and bitsPerBand must be positive")
     // persisted: the band explode and both verify sides read one scan
     // + one projection pass (bands*bitsPerBand hyperplane folds per
-    // row) — same caching contract as Dedup.ngramJaccardPairs
+    // row) — the caching contract of Dedup's pair operators
+    // (`Dedup.persisted`)
     val signed = hyperplaneSignature(df, embCol, dim, bands * bitsPerBand, seed)
       .select(col(idCol).as("id"), col(embCol).cast("array<double>").as("emb"), col("lsh_bucket"))
       .withColumn("norm", VectorFns.norm2(col("emb")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bucketCols = (0 until bands).map { b =>
-      struct(
-        lit(b).as("band"),
-        substring(col("lsh_bucket"), b * bitsPerBand + 1, bitsPerBand).as("bucket"))
-    }
-    val banded = signed
-      .select(col("id"), explode(array(bucketCols: _*)).as("bb"))
-      .select(col("id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-    val cand = banded
-      .select(col("id").as("id_a"), col("band"), col("bucket"))
-      .join(banded.select(col("id").as("id_b"), col("band"), col("bucket")), Seq("band", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .distinct()
+    val buckets = (0 until bands).map(b => substring(col("lsh_bucket"), b * bitsPerBand + 1, bitsPerBand))
+    val cand = Dedup.bandCandidates(signed, signed, buckets, col("id_a") < col("id_b"))
     val ea = signed.select(col("id").as("id_a"), col("emb").as("emb_a"), col("norm").as("norm_a"))
     val eb = signed.select(col("id").as("id_b"), col("emb").as("emb_b"), col("norm").as("norm_b"))
     cand

@@ -80,7 +80,7 @@ object Corpus {
     //     now 3 (Profile -x, r5).
     // MEMORY_AND_DISK spills at 100 TB instead of rescanning;
     // sessions clear the blocks with spark.catalog.clearCache()
-    // between queries (see ngramJaccardPairs' contract note).
+    // between queries (see the caching contract on `Dedup.persisted`).
     def cached(df: DataFrame): DataFrame =
       df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val gated0 = docs

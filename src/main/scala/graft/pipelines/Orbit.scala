@@ -132,11 +132,26 @@ object Orbit {
   /** E1/F1 — retrieval with the reference's fallback-if-empty
     * company filter (`rag_pipeline.py:51-75`): filter chunks whose
     * source contains the company id; if that yields nothing, fall
-    * back to the unfiltered corpus. A driver-side conditional, as the
-    * semantics demand (SURVEY §7.4 hard part 3), but one execution per
-    * hit: the filtered top-k runs once and comes back as a local
-    * relation of the same schema (collecting it runs no job); only an
-    * empty result returns the unfiltered plan for the caller to run.
+    * back to the unfiltered corpus. The query is the company id
+    * prepended to the query text ([[Rag.augmentQuery]]). A
+    * driver-side conditional, as the semantics demand (SURVEY §7.4
+    * hard part 3), but one execution per hit: the filtered top-k runs
+    * once and comes back as a local relation of the same schema
+    * (collecting it runs no job); only an empty result returns the
+    * unfiltered plan for the caller to run.
+    *
+    * Edge inputs:
+    *   - a blank or whitespace-only company id filters nothing: the
+    *     unfiltered plan is returned directly, unrun (an empty
+    *     substring would match every source anyway);
+    *   - the filter is a case-folded SUBSTRING match on `source`, so
+    *     an id that is a substring of another company's source
+    *     (`acme` in `acme-labs/feed`) also returns that company's
+    *     chunks — the reference's semantics, kept;
+    *   - `topK` above the number of chunks returns every chunk;
+    *   - empty query text searches on the company id alone; with a
+    *     blank id too, every chunk scores 0.0 and the order is
+    *     (doc_id, chunk_index).
     */
   def ragSearchCompany(
       docs: DataFrame,
@@ -144,13 +159,17 @@ object Orbit {
       queryText: String,
       topK: Int,
       chunkSize: Int = 1000): DataFrame = {
-    val query = s"$companyId $queryText"
-    val filtered = Rag.topKChunks(docs, query, topK, chunkSize, sourceContains = Some(companyId))
-    // bounded collect: a top-k result of at most `topK` rows (the
-    // ≤k-row class PlanHygieneSpec permits), never the corpus
-    val hits = filtered.collect()
-    if (hits.nonEmpty)
-      docs.sparkSession.createDataFrame(java.util.Arrays.asList(hits: _*), filtered.schema)
-    else Rag.topKChunks(docs, query, topK, chunkSize)
+    val query = Rag.augmentQuery(companyId, queryText)
+    def unfiltered = Rag.topKChunks(docs, query, topK, chunkSize)
+    if (companyId.trim.isEmpty) unfiltered
+    else {
+      val filtered = Rag.topKChunks(docs, query, topK, chunkSize, sourceContains = Some(companyId))
+      // bounded collect: a top-k result of at most `topK` rows (the
+      // ≤k-row class PlanHygieneSpec permits), never the corpus
+      val hits = filtered.collect()
+      if (hits.nonEmpty)
+        docs.sparkSession.createDataFrame(java.util.Arrays.asList(hits: _*), filtered.schema)
+      else unfiltered
+    }
   }
 }

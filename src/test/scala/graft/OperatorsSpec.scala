@@ -892,6 +892,176 @@ class OperatorsSpec extends SparkSpec {
     assert(pairs.get((1L, 4L)).contains(1.0))
   }
 
+  // Near-dup pair family pins -------------------------------------------------
+  // One fixture run through every pair entry point. The expected rows
+  // (exact doubles) were recorded from the per-entry pipelines before
+  // their stages were shared, so a port that moves any row or score
+  // fails here. Fixture: 1/2 exact dups, 3 a near dup of both, 4 too
+  // short for a 3-shingle, 6 a snippet contained in 5, 7/8 partial
+  // overlap, 10 unrelated; "all rights reserved" sits in 7 docs, over
+  // the pinned maxDf of 4.
+  private lazy val pinDocs = Seq(
+    (1L, "the quarterly report shows revenue growth across every region all rights reserved"),
+    (2L, "the quarterly report shows revenue growth across every region all rights reserved"),
+    (3L, "the quarterly report shows revenue decline across every region all rights reserved"),
+    (4L, "brief note"),
+    (5L, "analysts expect the merger to close next spring pending approval by regulators " +
+      "in both countries all rights reserved"),
+    (6L, "the merger to close next spring pending approval"),
+    (7L, "hiring slowed at the startup after its seed round all rights reserved"),
+    (8L, "hiring slowed at the startup after its second round of layoffs all rights reserved"),
+    (10L, "an unrelated page about gardening tools and soil quality all rights reserved")
+  ).toDF("doc_id", "text")
+
+  // a daily batch against pinDocs: 3 revised (batch wins), 6 unchanged,
+  // 11 new and an exact dup of 7
+  private lazy val pinBatch = Seq(
+    (3L, "the quarterly report shows revenue growth across every region all rights reserved today"),
+    (6L, "the merger to close next spring pending approval"),
+    (11L, "hiring slowed at the startup after its seed round all rights reserved")
+  ).toDF("doc_id", "text")
+
+  private lazy val pinVecs = Seq(
+    (1L, Seq(1.0, 0.0, 0.0, 0.0)),
+    (2L, Seq(1.0, 0.1, 0.0, 0.0)),
+    (3L, Seq(0.9, 0.1, 0.1, 0.0)),
+    (4L, Seq(0.0, 1.0, 0.0, 0.0)),
+    (5L, Seq(0.0, 0.9, 0.2, 0.0)),
+    (6L, Seq(0.0, 0.0, 0.0, 1.0)),
+    (7L, Seq(0.0, 0.0, 0.0, 0.0))
+  ).toDF("vec_id", "embedding")
+
+  private def pinned(
+      name: String,
+      columns: Seq[String],
+      expected: Seq[Seq[Any]])(df: => org.apache.spark.sql.DataFrame): Unit =
+    test(s"near-dup pin: $name") {
+      val out = df
+      try {
+        assert(out.columns.toSeq == columns)
+        val rows = out.orderBy(out.columns.map(col).toIndexedSeq: _*).collect().map(_.toSeq).toSeq
+        def literal(v: Any): String = v match {
+          case l: Long => s"${l}L"
+          case other   => other.toString
+        }
+        assert(rows == expected, rows.map(_.map(literal).mkString("Seq(", ", ", ")")).mkString(",\n"))
+      } finally spark.catalog.clearCache()
+    }
+
+  private val idsJaccard = Seq("id_a", "id_b", "jaccard")
+
+  pinned("ngramJaccardPairs", idsJaccard, Seq(
+    Seq(1L, 2L, 1.0),
+    Seq(1L, 3L, 0.5),
+    Seq(2L, 3L, 0.5),
+    Seq(5L, 6L, 0.4),
+    Seq(7L, 8L, 0.3333333333333333)))(
+    Dedup.ngramJaccardPairs(pinDocs, "text", "doc_id", 3, 0.3, maxDf = 4))
+
+  pinned("prefixJaccardPairs", idsJaccard, Seq(
+    Seq(1L, 2L, 1.0),
+    Seq(1L, 3L, 0.5),
+    Seq(2L, 3L, 0.5),
+    Seq(5L, 6L, 0.4),
+    Seq(7L, 8L, 0.3333333333333333)))(
+    Dedup.prefixJaccardPairs(pinDocs, "text", "doc_id", 3, 0.3, maxDf = 4))
+
+  pinned("ngramJaccardAgainst", idsJaccard, Seq(
+    Seq(1L, 3L, 0.9),
+    Seq(2L, 3L, 0.9),
+    Seq(5L, 6L, 0.4),
+    Seq(7L, 11L, 1.0),
+    Seq(8L, 11L, 0.3333333333333333)))(
+    Dedup.ngramJaccardAgainst(pinBatch, pinDocs, "text", "doc_id", 3, 0.2, maxDf = 4))
+
+  pinned("containmentPairs", Seq("id_a", "id_b", "containment"), Seq(
+    Seq(1L, 2L, 1.0),
+    Seq(1L, 3L, 0.6666666666666666),
+    Seq(2L, 3L, 0.6666666666666666),
+    Seq(5L, 6L, 1.0),
+    Seq(7L, 8L, 0.5555555555555556)))(
+    Dedup.containmentPairs(pinDocs, "text", "doc_id", 3, 0.5, maxDf = 4))
+
+  pinned("explainJaccardPairs", Seq("id_a", "id_b", "sz_a", "sz_b", "common", "jac6", "cont6"), Seq(
+    Seq(1L, 2L, 9L, 9L, 9L, 1000000L, 1000000L),
+    Seq(1L, 3L, 9L, 9L, 6L, 500000L, 666666L),
+    Seq(2L, 3L, 9L, 9L, 6L, 500000L, 666666L),
+    Seq(5L, 6L, 15L, 6L, 6L, 400000L, 1000000L),
+    Seq(7L, 8L, 9L, 11L, 5L, 333333L, 555555L)))(
+    Dedup.explainJaccardPairs(pinDocs, "text", "doc_id", 3, 0.1, maxDf = 4))
+
+  pinned("canaryRecall", Seq("n_planted", "n_found", "recall_ppm"), Seq(
+    Seq(3L, 3L, 1000000L)))(
+    Dedup.canaryRecall(pinDocs, "text", "doc_id", 3, 0.5, plantEvery = 2))
+
+  pinned("canarySweep", Seq("threshold_pct", "n_planted", "n_found", "recall_ppm", "n_pairs_total"), Seq(
+    Seq(20L, 3L, 3L, 1000000L, 11L),
+    Seq(50L, 3L, 3L, 1000000L, 7L),
+    Seq(80L, 3L, 1L, 333333L, 2L),
+    Seq(95L, 3L, 1L, 333333L, 2L)))(
+    Dedup.canarySweep(pinDocs, "text", "doc_id", 3, Seq(20, 50, 80, 95), plantEvery = 2))
+
+  pinned("minhashLshPairs (band 1)", idsJaccard, Seq(
+    Seq(1L, 2L, 1.0),
+    Seq(5L, 6L, 0.375),
+    Seq(7L, 8L, 0.375)))(
+    Dedup.minhashLshPairs(pinDocs, "text", "doc_id", 3, 8, 1, 0.1))
+
+  pinned("minhashLshPairs (band 2)", idsJaccard, Seq(
+    Seq(1L, 2L, 1.0),
+    Seq(5L, 6L, 0.375),
+    Seq(7L, 8L, 0.375)))(
+    Dedup.minhashLshPairs(pinDocs, "text", "doc_id", 3, 8, 2, 0.1))
+
+  pinned("minhashLshAgainst", idsJaccard, Seq(
+    Seq(3L, 1L, 0.9090909090909091),
+    Seq(3L, 2L, 0.9090909090909091),
+    Seq(6L, 5L, 0.375),
+    Seq(6L, 6L, 1.0),
+    Seq(11L, 7L, 1.0),
+    Seq(11L, 8L, 0.375)))(
+    Dedup.minhashLshAgainst(pinBatch, pinDocs, "text", "doc_id", 3, 8, 1, 0.2))
+
+  pinned("minhashLshAgainstSigs", idsJaccard, Seq(
+    Seq(3L, 1L, 0.9090909090909091),
+    Seq(3L, 2L, 0.9090909090909091),
+    Seq(6L, 5L, 0.375),
+    Seq(6L, 6L, 1.0),
+    Seq(11L, 7L, 1.0),
+    Seq(11L, 8L, 0.375)))(
+    Dedup.minhashLshAgainstSigs(
+      pinBatch, Dedup.minhashSign(pinDocs, "text", "doc_id", 3, 8), "text", "doc_id", 3, 8, 2, 0.2))
+
+  test("minhashSign returns an unpersisted plan; a pair pipeline's cached batch signatures are reused") {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    def readsCache(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.withCachedData.collectFirst { case r: InMemoryRelation => r }.nonEmpty
+    spark.catalog.clearCache()
+    val rdds = spark.sparkContext.getPersistentRDDs.keySet
+    // signing an equal input twice leaves no cache entry and no persistent RDD
+    for (_ <- 1 to 2) {
+      val signed = Dedup.minhashSign(pinDocs, "text", "doc_id", 3, 8)
+      assert(signed.count() == 8L)
+      assert(!readsCache(signed))
+    }
+    assert(spark.sparkContext.getPersistentRDDs.keySet == rdds)
+    // the daily delta: matching a batch persists its signatures, and
+    // signing the same batch afterwards reads them from that cache
+    Dedup.minhashLshAgainstSigs(
+      pinBatch, Dedup.minhashSign(pinDocs, "text", "doc_id", 3, 8), "text", "doc_id", 3, 8, 1, 0.2).count()
+    val resigned = Dedup.minhashSign(pinBatch, "text", "doc_id", 3, 8)
+    assert(readsCache(resigned))
+    spark.catalog.clearCache()
+  }
+
+  pinned("bandedLshNearDupPairs", Seq("id_a", "id_b", "score"), Seq(
+    Seq(1L, 2L, 0.9950371902099893),
+    Seq(1L, 3L, 0.9878783399072131),
+    Seq(2L, 3L, 0.993897639695144),
+    Seq(4L, 5L, 0.9761870601839527)))(
+    Similarity.bandedLshNearDupPairs(pinVecs, "vec_id", "embedding", 4, bands = 4, bitsPerBand = 2,
+      threshold = 0.5))
+
   test("simhash: identical fingerprints for dups, close for near-dups") {
     val fp = nearDupDocs
       .select($"doc_id", Dedup.simhashFingerprint(graft.functions.TextFns.tokens($"text")).as("fp"))

@@ -125,6 +125,51 @@ class OrbitSpec extends SparkSpec {
     assert(fallbackRuns == 2)
   }
 
+  // edge inputs of the serving API
+  private lazy val edgeDocs = Seq(
+    (1L, "acme quarterly spark results", "acme/blog"),
+    (2L, "acme labs spark results preview", "acme-labs/feed"),
+    (3L, "unrelated corpus text", "other/site")
+  ).toDF("doc_id", "text", "source")
+
+  private def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
+
+  test("E1 ragSearchCompany: a blank company id runs the unfiltered plan, unrun") {
+    val unfiltered = rows(Rag.topKChunks(edgeDocs, "spark results", 5, 100))
+    for (id <- Seq("", "   ")) {
+      val SparkSpec.Runs(out, started, _, _) =
+        runs(Orbit.ragSearchCompany(edgeDocs, id, "spark results", 5, chunkSize = 100))
+      assert(started == 0, s"id '$id' ran $started executions before the caller's")
+      assert(rows(out) == unfiltered)
+    }
+    // the same rows the empty-substring filter used to return as a "hit"
+    assert(rows(Rag.topKChunks(edgeDocs, " spark results", 5, 100, sourceContains = Some(""))) ==
+      unfiltered)
+  }
+
+  test("E1 ragSearchCompany: an id that is a substring of another company's source matches both") {
+    def sources(id: String) =
+      rows(Orbit.ragSearchCompany(edgeDocs, id, "spark results", 5, chunkSize = 100))
+        .map(_.getString(2)).toSet
+    assert(sources("acme") == Set("acme/blog", "acme-labs/feed"))
+    assert(sources("ACME-labs") == Set("acme-labs/feed"))
+  }
+
+  test("E1 ragSearchCompany: k above the corpus size returns every candidate chunk") {
+    val hit = rows(Orbit.ragSearchCompany(edgeDocs, "acme", "spark results", 50, chunkSize = 100))
+    assert(hit.map(_.getLong(0)).sorted == Seq(1L, 2L))
+    val fallback = rows(Orbit.ragSearchCompany(edgeDocs, "zcorp", "spark results", 50, chunkSize = 100))
+    assert(fallback.map(_.getLong(0)).sorted == Seq(1L, 2L, 3L))
+  }
+
+  test("E1 ragSearchCompany: empty query text searches on the company id alone") {
+    assert(rows(Orbit.ragSearchCompany(edgeDocs, "acme", "", 5, chunkSize = 100)) ==
+      rows(Rag.topKChunks(edgeDocs, "acme", 5, 100, sourceContains = Some("acme"))))
+    // nothing to embed: every chunk scores 0.0, ordered by doc id
+    val blank = rows(Orbit.ragSearchCompany(edgeDocs, " ", "", 5, chunkSize = 100))
+    assert(blank.map(r => (r.getLong(0), r.getDouble(3))) == Seq((1L, 0.0), (2L, 0.0), (3L, 0.0)))
+  }
+
   test("event_type domain matches the reference's 18-value enum") {
     assert(EventTypes.size == 18 && EventTypes.contains("open_source_release"))
     assert(events.collect().forall(e => EventTypes.contains(e.event_type)))
