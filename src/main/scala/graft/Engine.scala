@@ -47,6 +47,11 @@ object Engine {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // `file:` writes set permissions without forking `chmod`
+      // (NioLocalFileSystem). Hadoop caches FileSystems by scheme and
+      // user, not class: a `file:` instance made before this session
+      // is the one its writes keep getting.
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
     // Deployment-specific overrides without a code change (the
     // scale-dependent-settings-stay-parameterised rule): semicolon-
     // separated key=value pairs, applied last so a cluster launcher

@@ -285,10 +285,56 @@ object Io {
   /** A stamped dir's files as written: with the family's persisted
     * schema when it has one (an EMPTY artifact writes a fileless dir,
     * and schema inference on it throws — supplied, it reads as an
-    * empty frame). One file listing, taken here.
+    * empty frame), else with the schema Spark wrote into the first
+    * data file's footer ([[writtenSchema]]). One file listing by the
+    * scan, taken here.
     */
   private def readFiles(spark: SparkSession, dir: String, schema: Option[StructType]): DataFrame =
-    schema.fold(spark.read)(s => spark.read.schema(s)).parquet(dir)
+    schema.orElse(writtenSchema(spark, dir)).fold(spark.read)(s => spark.read.schema(s)).parquet(dir)
+
+  /** The schema Spark's (non-merging) inference gives the parquet
+    * files under `dir`, read here instead of in a Spark job:
+    * the Spark schema written under [[SparkRowMetadata]] in the footer
+    * of the first data file in path order — the file that inference
+    * reads. None when `dir` has no data file, or its footer no such
+    * key (files Spark did not write): the caller then infers.
+    */
+  private[graft] def writtenSchema(spark: SparkSession, dir: String): Option[StructType] = {
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = root.getFileSystem(conf)
+    // skip what Spark's file index skips (`_x` unless `k=v`, `.x`);
+    // sort a dir `d` as "d/", so the depth-first first file is the
+    // first full path, as inference orders them
+    def firstFile(p: org.apache.hadoop.fs.Path): Option[org.apache.hadoop.fs.Path] =
+      fs.listStatus(p)
+        .filterNot { s =>
+          val n = s.getPath.getName
+          (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") || n.endsWith("._COPYING_")
+        }
+        .sortBy(s => if (s.isDirectory) s.getPath.getName + "/" else s.getPath.getName)
+        .iterator
+        .flatMap(s => if (s.isDirectory) firstFile(s.getPath) else Some(s.getPath))
+        .nextOption()
+    val first =
+      try firstFile(root)
+      catch { case _: java.io.FileNotFoundException => None }
+    first.flatMap(footerSchema(conf, _))
+  }
+
+  /** The key under which Spark writes a parquet file's Spark schema. */
+  private val SparkRowMetadata = "org.apache.spark.sql.parquet.row.metadata"
+
+  private def footerSchema(
+      conf: org.apache.hadoop.conf.Configuration,
+      file: org.apache.hadoop.fs.Path): Option[StructType] = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
+    val json =
+      try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData.get(SparkRowMetadata))
+      finally reader.close()
+    json.flatMap(j => scala.util.Try(schemaOf(j)).toOption)
+  }
 
   /** `files`' rows with `__seq` defaulted to 0, restricted to stamps
     * <= `asOf`.
@@ -314,9 +360,12 @@ object Io {
     */
   private def readSidecar(spark: SparkSession, path: String, name: String): DataFrame = {
     val dir = new org.apache.hadoop.fs.Path(s"$path/$name")
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    spark.read.parquet(
-      fs.listStatus(dir).map(_.getPath).filter(_.getName.endsWith(".parquet")).map(_.toString).toIndexedSeq: _*)
+    val conf = spark.sessionState.newHadoopConf()
+    val files = dir.getFileSystem(conf).listStatus(dir).map(_.getPath.toString)
+      .filter(_.endsWith(".parquet"))
+    // inference reads the first file in path order; read its footer here
+    val schema = files.minOption.flatMap(f => footerSchema(conf, new org.apache.hadoop.fs.Path(f)))
+    schema.fold(spark.read)(s => spark.read.schema(s)).parquet(files.toIndexedSeq: _*)
   }
 
   // ---- tombstone deletes (takedown / right-to-be-forgotten) -------
@@ -526,9 +575,9 @@ object Io {
   }
 
   private def readCentroids(spark: SparkSession, path: String): Seq[Array[Double]] =
-    spark.read.parquet(s"$path/centroids")
-      .orderBy(col("cell"))
+    readFiles(spark, s"$path/centroids", None)
       .collect()
+      .sortBy(_.getAs[Int]("cell"))
       .map(_.getAs[scala.collection.Seq[Double]]("centroid").toArray)
       .toSeq
 
@@ -538,7 +587,7 @@ object Io {
     * [[readIvfIndexLatest]] when the index has live upserts.
     */
   def readIvfIndex(spark: SparkSession, path: String): (Seq[Array[Double]], DataFrame) =
-    (readCentroids(spark, path), spark.read.parquet(s"$path/cells").drop("__seq"))
+    (readCentroids(spark, path), readFiles(spark, s"$path/cells", None).drop("__seq"))
 
   /** Incremental IVF upsert — the reference's index maintenance shape
     * (Pinecone upserts vectors into an EXISTING index; the fit is
@@ -613,7 +662,7 @@ object Io {
     * crossJoin, nothing ever touches the driver.
     */
   def readIvfCentroidFrame(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/centroids")
+    readFiles(spark, s"$path/centroids", None)
       .select(
         col("cell").cast("int").as("cell"),
         col("centroid").cast("array<double>").as("ce"))
@@ -649,7 +698,7 @@ object Io {
   def readPqIndex(
       spark: SparkSession,
       path: String): (Seq[Seq[Array[Double]]], DataFrame) =
-    (readPqCodebooks(spark, path), spark.read.parquet(s"$path/codes").drop("__seq"))
+    (readPqCodebooks(spark, path), readFiles(spark, s"$path/codes", None).drop("__seq"))
 
   /** Incremental PQ upsert — [[upsertIvfIndex]]'s mirror for the
     * byte-coded layout: `codes` (new/changed vectors already ENCODED
@@ -700,8 +749,7 @@ object Io {
     compactDir(readLastWins(spark, path, s"$path/codes", idCol), s"$path/codes", None, Some(path))
 
   private def readPqCodebooks(spark: SparkSession, path: String): Seq[Seq[Array[Double]]] =
-    spark.read.parquet(s"$path/codebooks")
-      .orderBy(col("sub"), col("cell"))
+    readFiles(spark, s"$path/codebooks", None)
       .collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getAs[scala.collection.Seq[Double]](2).toArray))
       .groupBy(_._1)
@@ -717,7 +765,7 @@ object Io {
     * [[readPqCodebooks]] stays the single-query bootstrap's reader.
     */
   def readPqCodebookFrame(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/codebooks")
+    readFiles(spark, s"$path/codebooks", None)
       .select(
         col("sub").cast("int").as("s"),
         col("cell").cast("int").as("code"),
@@ -769,7 +817,7 @@ object Io {
     * when the index has live upserts.
     */
   def readPostings(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).drop("__seq")
+    readFiles(spark, path, None).drop("__seq")
 
   /** Incremental postings upsert — the IVF/PQ maintenance shape for
     * the retrieval index: `index` is the
@@ -880,7 +928,7 @@ object Io {
     readPostingsLatest(spark, path)
       .drop("term_bucket")
       .write.mode("overwrite").parquet(stagingOf(path))
-    writePostings(spark.read.parquet(stagingOf(path)), path, buckets)
+    writePostings(readFiles(spark, stagingOf(path), None), path, buckets)
     deleteDir(spark, stagingOf(path))
   }
 
@@ -1174,7 +1222,7 @@ object Io {
     writeStamped(codes, path, Some("pfx"))
 
   def readPhashIndex(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).drop("__seq")
+    readFiles(spark, path, None).drop("__seq")
 
   /** Append re-hashed media codes to a persisted phash index with a
     * caller seq stamp (the re-crawled-image shape: decode + hash runs

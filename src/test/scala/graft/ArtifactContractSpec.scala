@@ -380,6 +380,45 @@ class ArtifactContractSpec extends SparkSpec {
     }
   }
 
+  /** The parquet table dirs under `dir`: each data file's dir with
+    * its partition (`k=v`) dirs stripped, sidecars included.
+    */
+  private def tableDirs(dir: String): Set[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    val walk = Files.walk(java.nio.file.Paths.get(dir))
+    try walk.iterator().asScala
+      .filter(p => p.getFileName.toString.endsWith(".parquet") && !p.getFileName.toString.startsWith("."))
+      .map(p => Iterator.iterate(p.getParent)(_.getParent).find(!_.getFileName.toString.contains("=")).get)
+      .toSet
+    finally walk.close()
+  }
+
+  for (f <- families) {
+    test(s"[${f.name}] footer-read schema equals Spark's inferred schema, every table dir and sidecar") {
+      val dir = tmp(s"contract_${f.name}s") + "/art"
+      f.build(dir)
+      f.upsert(dir, 1L)
+      f.delete(dir, 2L)
+      import scala.jdk.CollectionConverters._
+      val dirs = tableDirs(dir)
+      assert(dirs.nonEmpty)
+      for (d <- dirs) {
+        // a sidecar is read through its listed files (Io.readSidecar)
+        val paths =
+          if (!d.getFileName.toString.startsWith("_")) Seq(d.toString)
+          else {
+            val files = Files.list(d)
+            try files.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toSeq
+            finally files.close()
+          }
+        val written = Io.writtenSchema(spark, d.toString)
+        assert(written.nonEmpty, s"${f.name}: $d")
+        assert(spark.read.schema(written.get).parquet(paths: _*).schema == spark.read.parquet(paths: _*).schema,
+          s"${f.name}: $d")
+      }
+    }
+  }
+
   for (f <- families.filter(_.rowVersioned)) {
     test(s"[${f.name}] tombstones: as-of hides a delete from its stamp on, as-of max == live") {
       val dir = tmp(s"contract_${f.name}t") + "/art"

@@ -5,6 +5,8 @@ import java.nio.file.Files
 import org.apache.spark.sql.Observation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.hadoop.fs.permission.FsPermission
+import scala.jdk.CollectionConverters._
 
 class IoSpec extends SparkSpec {
   import spark.implicits._
@@ -453,5 +455,106 @@ class IoSpec extends SparkSpec {
       .getFileSystem(spark.sessionState.newHadoopConf())
     assert(!fs.exists(new org.apache.hadoop.fs.Path(dir + "/_tombstones")))
     assert(!fs.exists(new org.apache.hadoop.fs.Path(dir + "/cells_compacting")))
+  }
+
+  // ---- the engine's `file:` FileSystem (NioLocalFileSystem) --------
+
+  private def rawStats(cls: Class[_ <: org.apache.hadoop.fs.FileSystem]) =
+    org.apache.hadoop.fs.FileSystem.getStatistics("file", cls)
+
+  test("engine session: `file:` is NioLocalFileSystem, and the session's writes go through it") {
+    val dir = tmp("nio_fs")
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+    assert(fs.getClass == classOf[NioLocalFileSystem])
+    assert(fs.asInstanceOf[org.apache.hadoop.fs.LocalFileSystem].getRawFileSystem.getClass ==
+      classOf[NioRawLocalFileSystem])
+    // the write tasks' FileSystem (Hadoop caches by scheme and user,
+    // not class): its output streams count into its class's statistics
+    val before = rawStats(classOf[NioRawLocalFileSystem]).getBytesWritten
+    spark.range(20).toDF("id").write.parquet(s"$dir/out")
+    assert(rawStats(classOf[NioRawLocalFileSystem]).getBytesWritten > before)
+  }
+
+  /** Every file and dir under `root`: (relative path with UUIDs
+    * folded to `U`, rwx bits), sorted.
+    */
+  private def tree(root: String): Seq[(String, String)] = {
+    val r = java.nio.file.Paths.get(root)
+    val uuid = "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}".r
+    val walk = Files.walk(r)
+    try walk.iterator().asScala.toSeq.map { p =>
+      (uuid.replaceAllIn(r.relativize(p).toString, "U"),
+        java.nio.file.attribute.PosixFilePermissions.toString(Files.getPosixFilePermissions(p)))
+    }.sorted
+    finally walk.close()
+  }
+
+  test("NioLocalFileSystem: partitioned parquet and JSON writes give the stock tree, .crc files and bits") {
+    // the stock FileSystem for one write: the class by writer option,
+    // uncached so the session's cached instance is not reused
+    val stock = Map(
+      "fs.file.impl" -> classOf[org.apache.hadoop.fs.LocalFileSystem].getName,
+      "fs.file.impl.disable.cache" -> "true")
+    val df = (0 until 40).map(i => (s"co${i % 5}", i.toLong, s"text $i")).toDF("company", "id", "body")
+      .repartition(3)
+    val stockRaw = rawStats(classOf[org.apache.hadoop.fs.RawLocalFileSystem])
+    val nioRaw = rawStats(classOf[NioRawLocalFileSystem])
+    for ((fmt, ext) <- Seq("parquet" -> ".parquet", "json" -> ".json")) {
+      val (a, b) = (tmp(s"stock_$fmt") + "/out", tmp(s"nio_$fmt") + "/out")
+      val stockBefore = stockRaw.getBytesWritten
+      df.write.options(stock).partitionBy("company").format(fmt).save(a)
+      assert(stockRaw.getBytesWritten > stockBefore, s"$fmt: stock write did not use the stock class")
+      val nioBefore = nioRaw.getBytesWritten
+      df.write.partitionBy("company").format(fmt).save(b)
+      assert(nioRaw.getBytesWritten > nioBefore, s"$fmt: engine write did not use the engine class")
+      val (ta, tb) = (tree(a), tree(b))
+      assert(ta == tb, s"$fmt trees differ:\n${ta.mkString("\n")}\n--\n${tb.mkString("\n")}")
+      // the comparison covers data files, their .crc siblings and dirs
+      val paths = ta.map(_._1)
+      assert(paths.count(_.endsWith(ext)) >= 5 && paths.count(_.endsWith(s"$ext.crc")) >= 5, paths)
+      assert(paths.count(_.matches("company=co[0-4]")) == 5, paths)
+    }
+  }
+
+  test("NioRawLocalFileSystem.setPermission: exactly the requested rwx bits; other modes go to Hadoop") {
+    val raw = new org.apache.hadoop.fs.Path(tmp("nio_perm"))
+      .getFileSystem(spark.sessionState.newHadoopConf())
+      .asInstanceOf[org.apache.hadoop.fs.LocalFileSystem].getRawFileSystem
+    val dir = Files.createDirectory(java.nio.file.Paths.get(tmp("nio_perm"), "d"))
+    val file = Files.createFile(dir.resolve("f"))
+    def mode(p: java.nio.file.Path) = Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xFFF
+    def set(p: java.nio.file.Path, m: Int) =
+      raw.setPermission(new org.apache.hadoop.fs.Path(p.toUri), new FsPermission(m.toShort))
+    for (p <- Seq(file, dir); m <- Seq("000", "600", "640", "644", "700", "755", "777")) {
+      set(p, Integer.parseInt(m, 8))
+      assert(mode(p) == Integer.parseInt(m, 8), s"$p $m")
+    }
+    // the sticky bit: java.nio cannot set it, Hadoop's chmod can
+    set(dir, Integer.parseInt("1777", 8))
+    assert(mode(dir) == Integer.parseInt("1777", 8))
+    // a setgid directory keeps its setgid, as under `chmod 0750`
+    Files.setAttribute(dir, "unix:mode", Integer.valueOf(Integer.parseInt("2755", 8)))
+    set(dir, Integer.parseInt("750", 8))
+    assert(mode(dir) == Integer.parseInt("2750", 8))
+  }
+
+  test("artifact reads: readIvfIndexLatest and readMinhashSigsLatest each run 2 jobs") {
+    val ivf = tmp("jobs_ivf") + "/idx"
+    val cents = Seq(Array(0.0, 1.0), Array(1.0, 0.0), Array(0.5, 0.5))
+    Io.writeIvfIndex(Seq((1L, 1L, 0), (2L, 2L, 1), (3L, 3L, 2)).toDF("id", "v", "cell"), cents, ivf)
+    Io.upsertIvfIndex(Seq((1L, 11L, 2)).toDF("id", "v", "cell"), ivf, 1L)
+    Io.deleteIvfIds(Seq(2L).toDF("id"), ivf, 2L)
+    val r = runs(Io.readIvfIndexLatest(spark, ivf, "id"))
+    assert(r.jobs == 2, r)
+    assert(r.out._1.map(_.toSeq) == cents.map(_.toSeq))
+    val sigs = tmp("jobs_sigs") + "/art"
+    val signed = (rows: Seq[(Long, String)]) =>
+      graft.operators.Dedup.minhashSign(rows.toDF("id", "text"), "text", "id", 3, 8)
+    Io.writeMinhashSigs(signed(Seq(1L -> "alpha beta gamma delta", 2L -> "one two three four")), sigs, 4)
+    Io.upsertMinhashSigs(signed(Seq(1L -> "alpha beta gamma epsilon zeta")), sigs, 1L)
+    Io.deleteMinhashIds(Seq(2L).toDF("id"), sigs, 2L)
+    val m = runs(Io.readMinhashSigsLatest(spark, sigs))
+    assert(m.jobs == 2, m)
+    assert(m.out.select("id").as[Long].collect().toSeq == Seq(1L))
   }
 }
